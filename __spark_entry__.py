@@ -4037,76 +4037,116 @@ def queries() -> dict[str, Query]:
         # --- ORDER MATTERS: the driver's correctness run caps at 50
         # queries per round taken in dict order. (bench.py follows
         # dict order too and quarantines the heavy Zipf exhibits at
-        # the end of its own suite.) Round-15 window (VERDICT r14
-        # item 9), 50 = 46 + 4; the exact set is pinned by test_edges
-        # and, structurally, by the ledger-derived staleness invariant
-        # (VERDICT r10 item 2):
-        # (1) the 46 queries whose newest driver row is r11 — every
-        #     one goes >=5 rounds stale the moment CORRECTNESS_r15
-        #     lands, so this round clears the whole r11 tranche
-        #     (embedding_ann_int8, the filler displaced from the r14
-        #     window by the semdedup_kmeans_capped arrival, leads;
-        #     index_build_text stays ahead of bm25_search and
-        #     phrase_search in dict order — their bench numbers must
-        #     be query-only):
-        "embedding_ann_int8": q_embedding_ann_int8,
-        "pq_encode": q_pq_encode,
-        "embedding_ann_pq": q_embedding_ann_pq,
-        "embedding_ann_pq_rerank": q_embedding_ann_pq_rerank,
-        "embedding_ann_ivfpq": q_embedding_ann_ivfpq,
-        "trigram_logprob": q_trigram_logprob,
-        "kn_logprob": q_kn_logprob,
-        "quality_classifier": q_quality_classifier,
-        "kmv_distinct_users": q_kmv_distinct_users,
-        "kmv_vocab_overlap": q_kmv_vocab_overlap,
-        "cms_token_counts": q_cms_token_counts,
-        "char_entropy": q_char_entropy,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "perplexity_buckets": q_perplexity_buckets,
-        "hll_distinct_users": q_hll_distinct_users,
-        "hll_daily_rollup": q_hll_daily_rollup,
-        "lpa_communities": q_lpa_communities,
-        "weighted_length_quantiles": q_weighted_length_quantiles,
-        "embedding_ann_rp": q_embedding_ann_rp,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "hard_negatives": q_hard_negatives,
-        "normalize_text": q_normalize_text,
-        "tfidf_search": q_tfidf_search,
-        "cusum_drift": q_cusum_drift,
-        "attribution_linear": q_attribution_linear,
-        "ann_recall_rp": q_ann_recall_rp,
-        "index_build_text": q_index_build_text,
-        "bm25_search": q_bm25_search,
-        "dup_clusters": q_dup_clusters,
-        "embedding_near_dups": q_embedding_near_dups,
-        "asof_click_purchase": q_asof_click_purchase,
-        "decontaminate": q_decontaminate,
-        "quality_rules": q_quality_rules,
-        "class_centroids": q_class_centroids,
-        "redact_pii": q_redact_pii,
-        "chunk_documents": q_chunk_documents,
-        "media_features": q_media_features,
-        "audio_features": q_audio_features,
-        "video_frames": q_video_frames,
-        "value_cdf": q_value_cdf,
-        "category_counts": q_category_counts,
-        "token_budget": q_token_budget,
-        "corpus_split": q_corpus_split,
-        "stratified_sample": q_stratified_sample,
-        "token_counts": q_token_counts,
-        "phrase_search": q_phrase_search,
-        # (2) proactive r12 rotations filling the remaining slots
-        #     (48 r12 rows go stale at r16; rotating a tranche now
-        #     smooths the r16 window to 44 + arrivals). New r15
-        #     arrivals would displace these fillers from the window
-        #     as they land (never-certified must be in-window):
-        "rolling_fingerprint": q_rolling_fingerprint,
-        "session_duration": q_session_duration,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        # --- outside the 50-query window: newest driver row r12-r14
-        # for every entry below (the r12 tranche leads the r16
-        # rotation):
+        # the end of its own suite.) Round-16 window, 50 = 44 + 6; the
+        # exact set is pinned by test_edges and, structurally, by the
+        # ledger-derived staleness invariant (VERDICT r10 item 2). The
+        # registry is ordered by newest certification row, oldest first:
+        # (1) the 44 queries whose newest certification row is r12 — every
+        #     one goes >=5 rounds stale the moment CORRECTNESS_r16
+        #     lands, so this round clears the whole r12 tranche:
+        "profile_agg_day": q_profile_agg_day,
+        "profile_agg_minute": q_profile_agg_minute,
+        "grouped_percentiles": q_grouped_percentiles,
+        "histogram_equi_depth": q_histogram_equi_depth,
+        "weighted_sample": q_weighted_sample,
+        "ewma_user_value": q_ewma_user_value,
+        "knn_graph": q_knn_graph,
+        "knn_graph_ivf": q_knn_graph_ivf,
+        "pagerank_knn": q_pagerank_knn,
+        "fuzzy_match_parts": q_fuzzy_match_parts,
+        "source_divergence": q_source_divergence,
+        "scd2_user_state": q_scd2_user_state,
+        "nucleus_langs": q_nucleus_langs,
+        "length_buckets": q_length_buckets,
+        "interpolate_values": q_interpolate_values,
+        "cluster_hubs": q_cluster_hubs,
+        "knn_triangles": q_knn_triangles,
+        "sorted_neighborhood": q_sorted_neighborhood,
+        "collocations": q_collocations,
+        "source_overlap": q_source_overlap,
+        "clustering_knn": q_clustering_knn,
+        "fk_audit": q_fk_audit,
+        "event_transitions": q_event_transitions,
+        "ks_drift": q_ks_drift,
+        "pack_texts": q_pack_texts,
+        "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
+        "ngram_jaccard_prefix_zipf": q_ngram_jaccard_prefix_zipf,
+        "containment_pairs_prefix": q_containment_pairs_prefix,
+        "containment_plain_zipf": q_containment_plain_zipf,
+        "containment_prefix_zipf": q_containment_prefix_zipf,
+        "time_extent": q_time_extent,
+        "kmeans_clusters": q_kmeans_clusters,
+        "kmeans_assign": q_kmeans_assign,
+        "kmeans_silhouette": q_kmeans_silhouette,
+        "coreset_sample": q_coreset_sample,
+        "pq_encode_opq": q_pq_encode_opq,
+        "ann_recall_pq": q_ann_recall_pq,
+        "ann_recall_opq": q_ann_recall_opq,
+        "rank_fusion": q_rank_fusion,
+        "mmr_rerank": q_mmr_rerank,
+        "seasonal_profile": q_seasonal_profile,
+        "name_resolution": q_name_resolution,
+        "revenue_by_nation": q_revenue_by_nation,
+        "revenue_monthly_yoy": q_revenue_monthly_yoy,
+        # (2) proactive r13 rotations filling the remaining slots
+        #     (49 r13 rows go stale at r17; rotating 6 now leaves the
+        #     r17 window 43 + arrivals). New r16 arrivals would
+        #     displace these fillers from the window as they land
+        #     (never-certified must be in-window):
+        "rfm_segments": q_rfm_segments,
+        "basket_pairs": q_basket_pairs,
+        "pagerank_knn_weighted": q_pagerank_knn_weighted,
+        "ks_drift_quantized": q_ks_drift_quantized,
+        "ks_reference_drift": q_ks_reference_drift,
+        "data_quality_checks": q_data_quality_checks,
+        # --- outside the 50-query window: newest certification row r13-r15
+        # for every entry below, oldest first (the r13 tranche leads
+        # the r17 rotation; index_build_text stays ahead of
+        # bm25_search and phrase_search in dict order — their bench
+        # numbers must be query-only):
+        "quantile_normalize": q_quantile_normalize,
+        "merge_upsert": q_merge_upsert,
+        "approx_percentiles": q_approx_percentiles,
+        "grouped_approx_percentiles": q_grouped_approx_percentiles,
+        "bpe_merges": q_bpe_merges,
+        "bpe_segments": q_bpe_segments,
+        "boilerplate_remove": q_boilerplate_remove,
+        "phash_dup_pairs": q_phash_dup_pairs,
+        "paragraph_dedup": q_paragraph_dedup,
+        "dup_ngram_spans": q_dup_ngram_spans,
+        "hopping_window": q_hopping_window,
+        "tfidf_top_terms": q_tfidf_top_terms,
+        "profile_columns": q_profile_columns,
+        "lead_quartile_events": q_lead_quartile_events,
+        "pivot_wide": q_pivot_wide,
+        "unpivot_long": q_unpivot_long,
+        "synthetic_gen": q_synthetic_gen,
+        "wide_table_roundtrip": q_wide_table_roundtrip,
+        "rolling_hour_avg": q_rolling_hour_avg,
+        "session_stats": q_session_stats,
+        "daily_uniques": q_daily_uniques,
+        "topk_users_per_event": q_topk_users_per_event,
+        "set_ops_events": q_set_ops_events,
+        "gap_fill_hourly": q_gap_fill_hourly,
+        "monthly_rollup": q_monthly_rollup,
+        "cast_double_view": q_cast_double_view,
+        "scaled_view": q_scaled_view,
+        "zero_fill": q_zero_fill,
+        "join_broadcast_dim": q_join_broadcast_dim,
+        "join_large_sortmerge": q_join_large_sortmerge,
+        "join_semi_anti": q_join_semi_anti,
+        "join_salted_skew": q_join_salted_skew,
+        "rollup_monthly_events": q_rollup_monthly_events,
+        "cube_user_bucket_events": q_cube_user_bucket_events,
+        "hourly_agg": q_hourly_agg,
+        "time_bound_hourly": q_time_bound_hourly,
+        "column_stats": q_column_stats,
+        "availability": q_availability,
+        "global_percentiles": q_global_percentiles,
+        "percentile_trimmed_hourly": q_percentile_trimmed_hourly,
+        "kmeans_clusters_capped": q_kmeans_clusters_capped,
+        "corpus_retrieval_v1": q_corpus_retrieval_v1,
+        "semdedup_kmeans": q_semdedup_kmeans,
         "iqr_trim_agg": q_iqr_trim_agg,
         "mad_trim_agg": q_mad_trim_agg,
         "interval_join_clicks": q_interval_join_clicks,
@@ -4157,99 +4197,56 @@ def queries() -> dict[str, Query]:
         "dsir_select": q_dsir_select,
         "embedding_quantize": q_embedding_quantize,
         "semdedup_kmeans_capped": q_semdedup_kmeans_capped,
-        "rfm_segments": q_rfm_segments,
-        "basket_pairs": q_basket_pairs,
-        "pagerank_knn_weighted": q_pagerank_knn_weighted,
-        "ks_drift_quantized": q_ks_drift_quantized,
-        "ks_reference_drift": q_ks_reference_drift,
-        "data_quality_checks": q_data_quality_checks,
-        "quantile_normalize": q_quantile_normalize,
-        "merge_upsert": q_merge_upsert,
-        "approx_percentiles": q_approx_percentiles,
-        "grouped_approx_percentiles": q_grouped_approx_percentiles,
-        "bpe_merges": q_bpe_merges,
-        "bpe_segments": q_bpe_segments,
-        "boilerplate_remove": q_boilerplate_remove,
-        "phash_dup_pairs": q_phash_dup_pairs,
-        "paragraph_dedup": q_paragraph_dedup,
-        "dup_ngram_spans": q_dup_ngram_spans,
-        "hopping_window": q_hopping_window,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "profile_columns": q_profile_columns,
-        "lead_quartile_events": q_lead_quartile_events,
-        "pivot_wide": q_pivot_wide,
-        "unpivot_long": q_unpivot_long,
-        "synthetic_gen": q_synthetic_gen,
-        "wide_table_roundtrip": q_wide_table_roundtrip,
-        "rolling_hour_avg": q_rolling_hour_avg,
-        "session_stats": q_session_stats,
-        "daily_uniques": q_daily_uniques,
-        "topk_users_per_event": q_topk_users_per_event,
-        "set_ops_events": q_set_ops_events,
-        "gap_fill_hourly": q_gap_fill_hourly,
-        "monthly_rollup": q_monthly_rollup,
-        "cast_double_view": q_cast_double_view,
-        "scaled_view": q_scaled_view,
-        "zero_fill": q_zero_fill,
-        "join_broadcast_dim": q_join_broadcast_dim,
-        "join_large_sortmerge": q_join_large_sortmerge,
-        "join_semi_anti": q_join_semi_anti,
-        "join_salted_skew": q_join_salted_skew,
-        "rollup_monthly_events": q_rollup_monthly_events,
-        "cube_user_bucket_events": q_cube_user_bucket_events,
-        "hourly_agg": q_hourly_agg,
-        "time_bound_hourly": q_time_bound_hourly,
-        "column_stats": q_column_stats,
-        "availability": q_availability,
-        "global_percentiles": q_global_percentiles,
-        "percentile_trimmed_hourly": q_percentile_trimmed_hourly,
-        "kmeans_clusters_capped": q_kmeans_clusters_capped,
-        "corpus_retrieval_v1": q_corpus_retrieval_v1,
-        "semdedup_kmeans": q_semdedup_kmeans,
-        "profile_agg_day": q_profile_agg_day,
-        "profile_agg_minute": q_profile_agg_minute,
-        "grouped_percentiles": q_grouped_percentiles,
-        "histogram_equi_depth": q_histogram_equi_depth,
-        "weighted_sample": q_weighted_sample,
-        "ewma_user_value": q_ewma_user_value,
-        "knn_graph": q_knn_graph,
-        "knn_graph_ivf": q_knn_graph_ivf,
-        "pagerank_knn": q_pagerank_knn,
-        "fuzzy_match_parts": q_fuzzy_match_parts,
-        "source_divergence": q_source_divergence,
-        "scd2_user_state": q_scd2_user_state,
-        "nucleus_langs": q_nucleus_langs,
-        "length_buckets": q_length_buckets,
-        "interpolate_values": q_interpolate_values,
-        "cluster_hubs": q_cluster_hubs,
-        "knn_triangles": q_knn_triangles,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "collocations": q_collocations,
-        "source_overlap": q_source_overlap,
-        "clustering_knn": q_clustering_knn,
-        "fk_audit": q_fk_audit,
-        "event_transitions": q_event_transitions,
-        "ks_drift": q_ks_drift,
-        "pack_texts": q_pack_texts,
-        "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
-        "ngram_jaccard_prefix_zipf": q_ngram_jaccard_prefix_zipf,
-        "containment_pairs_prefix": q_containment_pairs_prefix,
-        "containment_plain_zipf": q_containment_plain_zipf,
-        "containment_prefix_zipf": q_containment_prefix_zipf,
-        "time_extent": q_time_extent,
-        "kmeans_clusters": q_kmeans_clusters,
-        "kmeans_assign": q_kmeans_assign,
-        "kmeans_silhouette": q_kmeans_silhouette,
-        "coreset_sample": q_coreset_sample,
-        "pq_encode_opq": q_pq_encode_opq,
-        "ann_recall_pq": q_ann_recall_pq,
-        "ann_recall_opq": q_ann_recall_opq,
-        "rank_fusion": q_rank_fusion,
-        "mmr_rerank": q_mmr_rerank,
-        "seasonal_profile": q_seasonal_profile,
-        "name_resolution": q_name_resolution,
-        "revenue_by_nation": q_revenue_by_nation,
-        "revenue_monthly_yoy": q_revenue_monthly_yoy,
+        "embedding_ann_int8": q_embedding_ann_int8,
+        "pq_encode": q_pq_encode,
+        "embedding_ann_pq": q_embedding_ann_pq,
+        "embedding_ann_pq_rerank": q_embedding_ann_pq_rerank,
+        "embedding_ann_ivfpq": q_embedding_ann_ivfpq,
+        "trigram_logprob": q_trigram_logprob,
+        "kn_logprob": q_kn_logprob,
+        "quality_classifier": q_quality_classifier,
+        "kmv_distinct_users": q_kmv_distinct_users,
+        "kmv_vocab_overlap": q_kmv_vocab_overlap,
+        "cms_token_counts": q_cms_token_counts,
+        "char_entropy": q_char_entropy,
+        "bloom_decontaminate": q_bloom_decontaminate,
+        "perplexity_buckets": q_perplexity_buckets,
+        "hll_distinct_users": q_hll_distinct_users,
+        "hll_daily_rollup": q_hll_daily_rollup,
+        "lpa_communities": q_lpa_communities,
+        "weighted_length_quantiles": q_weighted_length_quantiles,
+        "embedding_ann_rp": q_embedding_ann_rp,
+        "cms_heavy_hitters": q_cms_heavy_hitters,
+        "hard_negatives": q_hard_negatives,
+        "normalize_text": q_normalize_text,
+        "tfidf_search": q_tfidf_search,
+        "cusum_drift": q_cusum_drift,
+        "attribution_linear": q_attribution_linear,
+        "ann_recall_rp": q_ann_recall_rp,
+        "index_build_text": q_index_build_text,
+        "bm25_search": q_bm25_search,
+        "dup_clusters": q_dup_clusters,
+        "embedding_near_dups": q_embedding_near_dups,
+        "asof_click_purchase": q_asof_click_purchase,
+        "decontaminate": q_decontaminate,
+        "quality_rules": q_quality_rules,
+        "class_centroids": q_class_centroids,
+        "redact_pii": q_redact_pii,
+        "chunk_documents": q_chunk_documents,
+        "media_features": q_media_features,
+        "audio_features": q_audio_features,
+        "video_frames": q_video_frames,
+        "value_cdf": q_value_cdf,
+        "category_counts": q_category_counts,
+        "token_budget": q_token_budget,
+        "corpus_split": q_corpus_split,
+        "stratified_sample": q_stratified_sample,
+        "token_counts": q_token_counts,
+        "phrase_search": q_phrase_search,
+        "rolling_fingerprint": q_rolling_fingerprint,
+        "session_duration": q_session_duration,
+        "text_stats": q_text_stats,
+        "lang_id": q_lang_id,
     }
 
 # --- DuckDB oracles --------------------------------------------------------

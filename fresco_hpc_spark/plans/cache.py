@@ -9,6 +9,11 @@ engine work — Catalyst has no TTL concept, deliberately).
 Scale note: entries cache *small derived relations* (hourly aggs, top-N,
 histograms — the reference's per-chart views), never raw scans; eviction
 calls ``unpersist`` so executor storage is reclaimed.
+
+Each entry records the store generation (``plans.store``) it was
+computed at; a store write in this process bumps the generation, so an
+entry from an older one counts as expired — a chart read after a merge
+reflects the merge instead of waiting out the TTL.
 """
 
 from __future__ import annotations
@@ -17,6 +22,8 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+from fresco_hpc_spark.plans.store import store_generation
 
 DEFAULT_TTL_SECONDS = 300.0  # reference: 5 min
 
@@ -31,7 +38,8 @@ class QueryCache:
     ) -> None:
         self._ttl = ttl_seconds
         self._clock = clock
-        self._entries: dict[str, tuple[float, DataFrame]] = {}
+        # key -> (computed at, store generation, cached result)
+        self._entries: dict[str, tuple[float, int, DataFrame]] = {}
         self.hits = 0
         self.misses = 0
 
@@ -47,23 +55,27 @@ class QueryCache:
         hit = self._entries.get(key)
         if hit is not None:
             self.hits += 1
-            return hit[1]
+            return hit[2]
         self.misses += 1
+        generation = store_generation()  # before compute: a write during it expires the entry
         df = compute().cache()
-        self._entries[key] = (self._clock(), df)
+        self._entries[key] = (self._clock(), generation, df)
         return df
 
     def evict_expired(self) -> int:
-        """Drop entries past their TTL, unpersisting executor storage."""
-        now = self._clock()
-        expired = [k for k, (t, _) in self._entries.items() if now - t > self._ttl]
+        """Drop entries past their TTL or from an older store generation,
+        unpersisting executor storage."""
+        now, generation = self._clock(), store_generation()
+        expired = [
+            k for k, (t, g, _) in self._entries.items()
+            if now - t > self._ttl or g != generation
+        ]
         for k in expired:
-            _, df = self._entries.pop(k)
-            df.unpersist()
+            self._entries.pop(k)[2].unpersist()
         return len(expired)
 
     def clear(self) -> None:
-        for _, df in self._entries.values():
+        for _, _, df in self._entries.values():
             df.unpersist()
         self._entries.clear()
 

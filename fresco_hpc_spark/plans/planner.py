@@ -3,14 +3,27 @@
 API-parity layer over the reference's AWS Lambda "query planner"
 (reference backend/lambda/lambda_handler.py): it parses the user's SQL
 string, extracts the mandatory ``time BETWEEN`` predicate, expands it to
-hour keys, prunes the hour-partitioned store, and returns a QueryPlan.
+hour keys and returns a QueryPlan of the window's hour chunks.
 
-In the reference the plan *is* the execution strategy (the browser
-downloads exactly the listed chunks). Here Catalyst already performs
-partition pruning, predicate pushdown, and projection pruning from the
-declarative query, so ``plan_query`` exists for parity/observability and
-``execute`` simply runs the SQL over the partitioned store — the plan
-metadata is derived from the same partition listing Catalyst will use.
+Both entry points cost what the window costs, not what the store holds:
+
+* ``plan_query`` lists only the window's hour directories
+  (``list_partition_files`` with ``hours``), like the reference's
+  manifest lookup (lambda_handler.py:313-373). It is metadata for
+  parity and observability; the data path is ``execute``.
+* ``execute`` runs the SQL over ONE store relation per (SparkSession,
+  store path, store generation): its in-memory file index is listed
+  once per generation, and each request only adds the window's
+  partition predicate, which Catalyst prunes against that index. The
+  store writers bump the generation (``plans.store``), so the next
+  request after a write in this process re-lists. Binding contract: a
+  writer outside this process must not change the store under a live
+  reader — the same contract ``compact_store`` documents — or the
+  reused relation may name files that are gone.
+* Each request's SQL is bound to its own pruned frame through a
+  request-unique temp view that is dropped as soon as ``spark.sql`` has
+  analysed the query: concurrent requests cannot see each other's
+  window, and no view outlives the call.
 
 Deliberate divergence (SURVEY.md §7.4 #7): the reference ships whole
 boundary hours and never re-applies the exact BETWEEN
@@ -21,12 +34,19 @@ predicate — Catalyst does both pruning and the precise filter.
 from __future__ import annotations
 
 import re
+import threading
+import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fresco_hpc_spark.plans.store import list_partition_files, read_partitioned_store
+from fresco_hpc_spark.plans.store import (
+    hours_by_day,
+    list_partition_files,
+    read_partitioned_store,
+    store_generation,
+)
 
 # Q3: regex extraction of the canonical predicate (lambda_handler.py:155-176;
 # duplicated client-side at web/src/util/client.ts:389-412).
@@ -125,24 +145,14 @@ def required_hours(start: datetime, end: datetime) -> list[datetime]:
     return out
 
 
-def _hour_fragment(h: datetime) -> str:
-    """Partition-path fragment for one hour; matched as a substring so the
-    scheme (file:/, hdfs://, s3a://) of the listing is irrelevant."""
-    return f"/year={h.year}/month={h.month}/day={h.day}/hour={h.hour}/"
-
-
 def plan_query(spark: SparkSession, sql: str, store_path: str) -> QueryPlan:
     """Q5+Q6+Q7: prune the hour-partitioned store to the query's hours and
-    size the read. The listing is driver-side metadata only (like the
-    reference's manifest lookup); the data path is ``execute``."""
+    size the read. Only the window's hour directories are listed
+    (driver-side metadata, like the reference's manifest lookup); the
+    data path is ``execute``."""
     start, end = extract_time_range(sql)
     hours = required_hours(start, end)
-    wanted = {_hour_fragment(h) for h in hours}
-    files = [
-        (f, size)
-        for f, size in list_partition_files(spark, store_path)
-        if any(frag in f for frag in wanted)
-    ]
+    files = list_partition_files(spark, store_path, hours)
     total = sum(size for _, size in files)
     # Q6: partition_count = min(4, n_chunks, max(1, round(total/50MB)))
     n_chunks = len(files)
@@ -166,6 +176,48 @@ def plan_query(spark: SparkSession, sql: str, store_path: str) -> QueryPlan:
 _TIME_ONLY_RE = re.compile(r"^\s*select\s+time\s+from\s+job_data\s*;?\s*$", re.IGNORECASE)
 
 
+_relations: dict[tuple[SparkSession, str, int], DataFrame] = {}
+_relations_lock = threading.Lock()
+
+
+def _store_relation(spark: SparkSession, store_path: str) -> DataFrame:
+    """The store relation of this (session, path, generation), read once:
+    later requests reuse its listed file index. A new generation drops
+    every relation of the old ones."""
+    key = (spark, store_path, store_generation())
+    with _relations_lock:
+        rel = _relations.get(key)
+        if rel is None:
+            rel = read_partitioned_store(spark, store_path)
+            for stale in [k for k in _relations if k[2] != key[2]]:
+                del _relations[stale]
+            _relations[key] = rel
+    return rel
+
+
+# a single- or double-quoted string literal, kept as is by _bind
+_STRING_LITERAL = r"'(?:[^'\\]|\\.)*'|" r'"(?:[^"\\]|\\.)*"'
+
+
+def _bind(spark: SparkSession, sql: str, table_name: str, df: DataFrame) -> DataFrame:
+    """``spark.sql(sql)`` with ``table_name`` naming ``df`` for this call
+    only: the name is rewritten to a request-unique temp view, which is
+    dropped once ``spark.sql`` has analysed the query (the analysed plan
+    holds ``df``'s plan, not the view's name)."""
+    view = f"_fresco_request_{uuid.uuid4().hex}"
+    bound = re.sub(
+        rf"({_STRING_LITERAL})|\b{re.escape(table_name)}\b",
+        lambda m: m.group(1) or view,
+        sql,
+        flags=re.IGNORECASE,
+    )
+    df.createTempView(view)
+    try:
+        return spark.sql(bound)
+    finally:
+        spark.catalog.dropTempView(view)
+
+
 def execute(
     spark: SparkSession,
     sql: str,
@@ -175,16 +227,17 @@ def execute(
 ) -> DataFrame:
     """Run the user's SQL over the partitioned store.
 
-    Registers the store as ``table_name`` (the reference's virtual remote
-    table, web/src/pages/query_builder.tsx:268) and lets Catalyst prune:
-    the ``time BETWEEN`` literal predicate cannot cross the derived
-    year/month/day/hour partition keys on its own, so we validate the
-    range (the required-BETWEEN contract) and attach the equivalent
-    partition-key predicate — after that the scan's PartitionFilters
-    prune to exactly the hours ``plan_query`` lists.
+    ``table_name`` in the SQL (the reference's virtual remote table,
+    web/src/pages/query_builder.tsx:268) names the store pruned to the
+    query's window, for this call only. The ``time BETWEEN`` literal
+    predicate cannot cross the derived year/month/day/hour partition
+    keys on its own, so we validate the range (the required-BETWEEN
+    contract) and attach the equivalent partition-key predicate — after
+    that the scan's PartitionFilters prune to exactly the hours
+    ``plan_query`` lists, from the reused relation's file index.
     """
     if _TIME_ONLY_RE.match(sql):
-        return read_partitioned_store(spark, store_path).select("time")
+        return _store_relation(spark, store_path).select("time")
     start, end = extract_time_range(sql)  # enforce the contract up front
     hours = required_hours(start, end)
     # Partition predicate in a shape Catalyst's pruning recognizes
@@ -192,23 +245,19 @@ def execute(
     # comparisons are NOT pruned): one conjunct per day, OR'd. The
     # reference caps windows at 30 days (query_builder.tsx:11), so this
     # stays <=31 disjuncts.
-    by_day: dict[tuple[int, int, int], list[int]] = {}
-    for h in hours:
-        by_day.setdefault((h.year, h.month, h.day), []).append(h.hour)
     disjuncts = [
         "(year = {} AND month = {} AND day = {} AND hour IN ({}))".format(
-            y, m, d, ",".join(str(x) for x in sorted(hs))
+            y, m, d, ",".join(map(str, hs))
         )
-        for (y, m, d), hs in sorted(by_day.items())
+        for (y, m, d), hs in hours_by_day(hours).items()
     ]
     pred = " OR ".join(disjuncts)
     pruned = (
-        read_partitioned_store(spark, store_path)
+        _store_relation(spark, store_path)
         .where(pred)
         .drop("year", "month", "day", "hour")
     )
-    pruned.createOrReplaceTempView(table_name)
-    out = spark.sql(sql)
+    out = _bind(spark, sql, table_name, pruned)
     # O5: the rowLimit carried in the reference's API payload
     # (client.ts:223-232, default 1e6) — LIMIT pushes into the plan
     return out.limit(row_limit) if row_limit is not None else out

@@ -8,14 +8,57 @@ restatement is a Hive-partitioned layout ``year=/month=/day=/hour=``: the
 manifest is subsumed by partition discovery plus parquet footer statistics,
 and Catalyst prunes partitions from the ``time BETWEEN`` predicate
 automatically — no custom FileIndex needed (SURVEY.md §4).
+
+Every writer here bumps one process-wide *store generation*
+(:func:`store_generation`). Readers that reuse work across requests —
+the planner's store relation and ``QueryCache`` entries — key it on the
+generation, so a write in this process retires them. A writer outside
+this process (or one that bypasses these functions) must not change the
+store under a live reader, or must call :func:`bump_store_generation`.
 """
 
 from __future__ import annotations
+
+import functools
+import re
+import threading
+from collections import defaultdict
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
+
+_generation = 0
+_generation_lock = threading.Lock()
+
+
+def store_generation() -> int:
+    """The process-wide store generation: bumped by every store write."""
+    return _generation
+
+
+def bump_store_generation() -> None:
+    """Retire every reader keyed on the current generation. The writers
+    in this package call it themselves."""
+    global _generation
+    with _generation_lock:
+        _generation += 1
+
+
+def _bumps_generation(write):
+    # in ``finally``: a write that fails half-way may still have changed
+    # files, and a reader listed before it must not outlive it
+    @functools.wraps(write)
+    def wrapper(*args, **kwargs):
+        try:
+            return write(*args, **kwargs)
+        finally:
+            bump_store_generation()
+
+    return wrapper
+
 
 #: Shared suffixes of the partition-swap protocol used by
 #: :func:`compact_store` and :func:`merge_into_store` — one healer
@@ -102,6 +145,7 @@ def _swap_partition_in(fs, _jp, part_dir: str) -> None:
         _must(fs.delete(_jp(backup), True), f"delete {backup}")
 
 
+@_bumps_generation
 def write_partitioned_store(
     df: DataFrame,
     path: str,
@@ -246,26 +290,65 @@ def write_bucketed_table(
     )
 
 
-def list_partition_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(file, size) listing via the Hadoop FileSystem API — works on
-    hdfs:// and s3a:// the same as file://, unlike os.walk. Used only by
-    the planner facade for plan metadata, never on the query path."""
+def hours_by_day(hours: list[datetime]) -> dict[tuple[int, int, int], list[int]]:
+    """Hour keys grouped by calendar day, both in ascending order: the
+    shape of one hour-directory glob, or one partition-pruning
+    disjunct, per day."""
+    by_day: dict[tuple[int, int, int], set[int]] = defaultdict(set)
+    for h in hours:
+        by_day[(h.year, h.month, h.day)].add(h.hour)
+    return {day: sorted(hs) for day, hs in sorted(by_day.items())}
+
+
+# characters Hadoop's glob treats as syntax, escaped in the store root
+_GLOB_SPECIAL = re.compile(r"[\\{}\[\]*?]")
+
+
+def list_partition_files(
+    spark: SparkSession, path: str, hours: list[datetime] | None = None
+) -> list[tuple[str, int]]:
+    """(file, size) of the store's parquet files, through the Hadoop
+    FileSystem API — works on hdfs:// and s3a:// the same as file://,
+    unlike os.walk.
+
+    Without ``hours`` the whole store is walked (compaction needs every
+    partition). With ``hours`` only those hour directories are listed:
+    one ``globStatus`` per calendar day, so the cost follows the window,
+    not the store — the reference's manifest lookup returns just the
+    window's chunks the same way (lambda_handler.py:313-373). The glob
+    also matches hours under a leading ``batch_id=`` level, the layout
+    :func:`fresco_hpc_spark.streaming.watcher.exactly_once_store_writer`
+    writes. Metadata only: the query path reads a partition-pruned
+    relation instead (``plans.planner.execute``)."""
     sc = spark.sparkContext
-    hadoop_conf = sc._jsc.hadoopConfiguration()
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hadoop_conf)
+    jpath = sc._jvm.org.apache.hadoop.fs.Path
+    root = jpath(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return []
+    if hours is None:
+        statuses = []
+        it = fs.listFiles(root, True)  # recursive
+        while it.hasNext():
+            statuses.append(it.next())
+    else:
+        base = _GLOB_SPECIAL.sub(r"\\\g<0>", path.rstrip("/"))
+        statuses = []
+        for (y, m, d), hs in hours_by_day(hours).items():
+            pattern = (
+                f"{base}/{{batch_id=*/,}}year={y}/month={m}/day={d}/"
+                f"hour={{{','.join(map(str, hs))}}}/*.parquet"
+            )
+            statuses.extend(fs.globStatus(jpath(pattern)) or [])
     out: list[tuple[str, int]] = []
-    if not fs.exists(jpath):
-        return out
-    it = fs.listFiles(jpath, True)  # recursive
-    while it.hasNext():
-        status = it.next()
+    for status in statuses:
         p = status.getPath().toString()
         if p.endswith(".parquet"):
             out.append((p, int(status.getLen())))
     return out
 
 
+@_bumps_generation
 def compact_store(
     spark: SparkSession,
     path: str,
@@ -298,7 +381,6 @@ def compact_store(
     rewritten partition paths.
     """
     import math
-    from collections import defaultdict
 
     sc = spark.sparkContext
     fs_conf = sc._jsc.hadoopConfiguration()
@@ -339,6 +421,7 @@ def compact_store(
     return rewritten
 
 
+@_bumps_generation
 def merge_into_store(
     spark: SparkSession,
     path: str,
@@ -515,7 +598,9 @@ def merge_into_store(
             for t in touched
         ],
     )
-    if fs.exists(_jp(path)) and list_partition_files(spark, path):
+    # an empty store — or touched hours that hold no files yet — has
+    # nothing to anti-join; list only the touched hours to find out
+    if list_partition_files(spark, path, [datetime(*t) for t in touched]):
         live = read_partitioned_store(spark, path).filter(hour_pred)
         key_match = reduce(
             lambda a, b: a & b,

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from fresco_hpc_spark.plans.store import bump_store_generation
+
 
 def stream_csv_directory(
     spark: SparkSession,
@@ -244,7 +246,9 @@ def exactly_once_store_writer(
     instead of duplicating them. Readers are unaffected: partition
     discovery handles the extra key, hour pruning still applies, and
     ``.drop("batch_id")`` restores the shape. Periodic ``compact_store``
-    runs fold the per-batch files.
+    runs fold the per-batch files. Each batch bumps the store generation
+    (``plans.store``), like every other store writer, so the planner's
+    reused relation and ``QueryCache`` entries see it.
 
     Use as: ``stream.writeStream.foreachBatch(
     exactly_once_store_writer(path)) ...``.
@@ -261,12 +265,15 @@ def exactly_once_store_writer(
         # writer-scoped dynamic overwrite (ADVICE r03): a session-conf
         # toggle would leak dynamic-overwrite semantics into any
         # concurrent write in the same session during this batch
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "year", "month", "day", "hour")
-            .option("compression", "snappy")
-            .parquet(store_path)
-        )
+        try:
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id", "year", "month", "day", "hour")
+                .option("compression", "snappy")
+                .parquet(store_path)
+            )
+        finally:
+            bump_store_generation()
 
     return process
