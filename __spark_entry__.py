@@ -494,8 +494,9 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ngram_jaccard_prefix computes the IDENTICAL relation losslessly at any
 # scale and the Zipf exhibit pair already models the quadratic regime.
 # The plain generator stays in the package (functions/dedup.py
-# ngram_jaccard_pairs) with full behavioral tests and the
-# tools/stress_zipf_jaccard.py crossover probe.
+# ngram_jaccard_pairs) with full behavioral tests; its crossover with
+# the prefix variant is recorded in SCALE.md ("Zipf-vs-uniform
+# crossover for exact Jaccard").
 
 def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same relation as ngram_jaccard_pairs via PPJoin-style prefix
@@ -3878,7 +3879,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the exact, scale-safe production shape and the Zipf containment
 # exhibits model the plain quadratic regime. The plain generator stays
 # in the package (functions/dedup.py ngram_containment_pairs) with
-# behavioral tests and tools/stress_zipf_containment.py.
+# behavioral tests; its crossover is recorded in SCALE.md.
 
 def q_containment_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-safe exact containment (functions/dedup.py

@@ -60,9 +60,8 @@ EXHIBIT_QUERIES = {
 #: r14: the uniform_plain cells ("ngram_jaccard_pairs",
 #: "containment_pairs") were retired from the registry (VERDICT r13
 #: item 3) — the Zipf exhibits model the plain/quadratic regime and
-#: tools/stress_zipf_{jaccard,containment}.py remain the larger-corpus
-#: crossover probes behind the SCALE.md analysis, so those cells now
-#: drop out of the grid (the ``if q in timings`` guard below).
+#: SCALE.md records the larger-corpus crossover measurements, so those
+#: cells now drop out of the grid (the ``if q in timings`` guard below).
 EXHIBIT_GRID = {
     "jaccard": {
         "zipf_plain": "ngram_jaccard_plain_zipf",

@@ -202,11 +202,11 @@ def _tokens_with_stats(
     key shuffles over the same relation) instead of recomputing the
     explode+distinct per side. The plain variant filters it on df; the
     prefix variant ranks it by (df, token). A caller running both
-    variants over one corpus (comparison harnesses, tools/
-    stress_zipf_jaccard.py) can persist this relation once and pass the
-    same DataFrame through both code paths via Spark's cache — the plans
-    reuse the InMemoryRelation automatically because both variants build
-    on the identical object."""
+    variants over one corpus (a comparison harness, such as the
+    crossover measurement recorded in SCALE.md) can persist this
+    relation once and pass the same DataFrame through both code paths
+    via Spark's cache — the plans reuse the InMemoryRelation
+    automatically because both variants build on the identical object."""
     from pyspark.sql import Window
 
     toks = _tokens(df, text_col, id_col, n)
@@ -788,7 +788,7 @@ def ngram_containment_pairs_prefix(
     with ``doc_a < doc_b``, emitted when either containment ≥ t.
 
     Measured crossover vs the plain variant on a Zipfian corpus:
-    tools/stress_zipf_containment.py, recorded in SCALE.md.
+    recorded in SCALE.md.
     """
     from pyspark.sql import Window
 

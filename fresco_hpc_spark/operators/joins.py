@@ -66,7 +66,7 @@ def salted_join(
 
     AQE's skew-join split (spark.sql.adaptive.skewJoin, on in session.py)
     handles SOME cases at runtime; the r8 head-to-head (SCALE.md
-    "AQE skew-join vs salted_join", tools/stress_r8.py) measured when it
+    "AQE skew-join vs salted_join") measured when it
     does not: hot partitions under skewedPartitionThresholdInBytes
     (256 MB default) are invisible to it, and a join feeding a SAME-key
     aggregation is never split (even forced) because the agg reuses the

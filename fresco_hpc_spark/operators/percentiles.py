@@ -4,10 +4,15 @@ A3/A5).
 The reference trims outliers by cross-joining each row against a 1-row
 percentile (or IQR) relation and keeping rows inside the bounds
 (DatabaseQueries.ts:158-190; databaseOptimization.ts:199-218). The Spark
-restatement keeps the same shape — a 1-row bounds DataFrame broadcast into
-a cross join — so nothing is collected to the driver and the operator
-composes lazily at any scale. Exact interpolating ``percentile`` matches
-DuckDB's PERCENTILE_CONT (SURVEY.md §7.4 trap 1).
+restatement keeps the same filter-by-bounds shape, but the bounds are not
+lazy: the global trims (``percentile_trim``, ``iqr_trim``, ``mad_trim``,
+``winsorize``, ``quantile_bucket``, ``global_percentiles``) get them from
+``distributed_exact_percentiles``, which persists its input and makes two
+driver collects (per-bucket counts, then the target rows) before the
+operator returns a plan; the bounds enter the plan as literals (a
+broadcast 1-row bounds relation for the trims). The grouped operators
+stay lazy. Exact interpolating ``percentile`` matches DuckDB's
+PERCENTILE_CONT (SURVEY.md §7.4 trap 1).
 
 Scale note: Spark's exact ``percentile`` aggregate merges every distinct
 value into ONE reducer's buffer — O(n) memory on a single node, dead at

@@ -18,7 +18,7 @@ Both entry points cost what the window costs, not what the store holds:
   store writers bump the generation (``plans.store``), so the next
   request after a write in this process re-lists. Binding contract: a
   writer outside this process must not change the store under a live
-  reader — the same contract ``compact_store`` documents — or the
+  reader — the contract ``store._rewrite_partitions`` documents — or the
   reused relation may name files that are gone.
 * Each request's SQL is bound to its own pruned frame through a
   request-unique temp view that is dropped as soon as ``spark.sql`` has

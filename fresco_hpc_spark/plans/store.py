@@ -60,11 +60,15 @@ def _bumps_generation(write):
     return wrapper
 
 
-#: Shared suffixes of the partition-swap protocol used by
-#: :func:`compact_store` and :func:`merge_into_store` — one healer
+#: Shared names of the partition-swap protocol (:func:`_rewrite_partitions`)
+#: used by :func:`compact_store` and :func:`merge_into_store` — one healer
 #: (:func:`_heal_crashed_swaps`) recovers both.
 STAGING_SUFFIX = "._compact_tmp"
 BACKUP_SUFFIX = "._compact_bak"
+STAGING_ROOT = "._merge_tmp_root"
+
+#: Compaction rewrites a partition dir into ``ceil(bytes / this)`` files.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def _must(ok: bool, what: str) -> None:
@@ -92,10 +96,15 @@ def _heal_crashed_swaps(fs, _jp, path: str) -> None:
     lost. Staging dirs are discarded only when the live dir holds the
     rows (deleting staging when live is absent could drop the only
     copy). Backups are processed first: rolling a backup back restores
-    the live dir the staging-cleanup branch checks for."""
+    the live dir the staging-cleanup branch checks for. A leftover
+    :data:`STAGING_ROOT` is deleted first: it is never the only copy of
+    a stored row."""
     root = _jp(path)
     if not fs.exists(root):
         return
+    stale = _jp(f"{path.rstrip('/')}/{STAGING_ROOT}")
+    if fs.exists(stale):
+        _must(fs.delete(stale, True), f"delete stale {stale}")
     leftovers: list[str] = []
     stack = [root]
     while stack:
@@ -125,12 +134,8 @@ def _heal_crashed_swaps(fs, _jp, path: str) -> None:
 
 
 def _swap_partition_in(fs, _jp, part_dir: str) -> None:
-    """Two-rename swap of ``part_dir + STAGING_SUFFIX`` into place:
-    live → backup, staging → live, delete backup. Each rename is atomic
-    per directory on HDFS-like stores; the pair is not, but a crash at
-    any point leaves the rows recoverable in exactly one of
-    live/staging/backup — :func:`_heal_crashed_swaps` completes or
-    rolls back on the next run. A first-time partition (no live dir)
+    """Swap ``part_dir + STAGING_SUFFIX`` into place (the protocol is on
+    :func:`_rewrite_partitions`). A first-time partition (no live dir)
     skips the backup step."""
     staging = part_dir + STAGING_SUFFIX
     backup = part_dir + BACKUP_SUFFIX
@@ -143,6 +148,70 @@ def _swap_partition_in(fs, _jp, part_dir: str) -> None:
     _must(fs.rename(_jp(staging), _jp(part_dir)), f"rename {staging} -> {part_dir}")
     if had_live:
         _must(fs.delete(_jp(backup), True), f"delete {backup}")
+
+
+def _open_store(spark: SparkSession, path: str, _wrap_fs=None):
+    """``(fs, _jp)`` for the store at ``path`` — its Hadoop FileSystem
+    and a ``str -> Path`` constructor — with any crashed swap healed."""
+    sc = spark.sparkContext
+    _jp = sc._jvm.org.apache.hadoop.fs.Path  # one lookup, not one per path
+    fs = _jp(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    if _wrap_fs is not None:
+        # test seam: Hadoop FileSystems signal most failures by RETURNING
+        # FALSE, and only a wrapper can force that branch deterministically
+        # (test_planner pins that a false rename aborts before any delete)
+        fs = _wrap_fs(fs)
+    _heal_crashed_swaps(fs, _jp, path)
+    return fs, _jp
+
+
+def _rewrite_partitions(
+    fs, _jp, path: str, df: DataFrame, part_cols: list[str],
+    rels: list[str], may_empty: bool,
+) -> list[str]:
+    """Replace the partition dirs ``rels`` (``year=…/hour=…``, relative
+    to ``path``) with ``df``'s rows: the one rewrite routine of the store.
+
+    ``df`` is written ONCE, ``partitionBy(part_cols)``, to the hidden
+    staging root :data:`STAGING_ROOT` (``.``-prefixed dirs are invisible
+    to readers). Each dir is then moved to ``<dir>._compact_tmp`` and
+    swapped in: live → ``<dir>._compact_bak``, staging → live, delete the
+    backup. Each rename is atomic per directory on HDFS-like stores; the
+    pair is not, but a crash at any point leaves the rows in exactly one
+    of live / staging / backup, and :func:`_heal_crashed_swaps` completes
+    or rolls back on the next run of either writer. Every FileSystem call
+    is checked by :func:`_must`. A dir with no rows in the staging output
+    aborts, unless ``may_empty``: then it swaps in an EMPTY dir (deleting
+    the live dir instead would look like a crashed swap to the healer,
+    which would resurrect the rows). Other dirs keep their files
+    byte-identical. Readers must not scan the store during the swap —
+    the contract of any file-level rewrite without a table format's
+    snapshot isolation. Returns ``f"{path}/{rel}"`` for each dir."""
+    base = path.rstrip("/")
+    staging_root = f"{base}/{STAGING_ROOT}"
+    (
+        df.write.mode("overwrite")
+        .partitionBy(*part_cols)
+        .option("compression", "snappy")
+        .parquet(staging_root)
+    )
+    out: list[str] = []
+    for rel in rels:
+        part_dir = f"{base}/{rel}"
+        src = f"{staging_root}/{rel}"
+        staging = part_dir + STAGING_SUFFIX
+        parent = _jp(part_dir).getParent()
+        if not fs.exists(parent):
+            _must(fs.mkdirs(parent), f"mkdirs {parent}")
+        if fs.exists(_jp(src)):
+            _must(fs.rename(_jp(src), _jp(staging)), f"rename {src} -> {staging}")
+        else:
+            _must(may_empty, f"exists {src}")
+            _must(fs.mkdirs(_jp(staging)), f"mkdirs {staging}")
+        _swap_partition_in(fs, _jp, part_dir)
+        out.append(part_dir)
+    _must(fs.delete(_jp(staging_root), True), f"delete {staging_root}")
+    return out
 
 
 @_bumps_generation
@@ -312,7 +381,9 @@ def list_partition_files(
     unlike os.walk.
 
     Without ``hours`` the whole store is walked (compaction needs every
-    partition). With ``hours`` only those hour directories are listed:
+    partition), skipping any path segment that starts with ``.`` or
+    ``_`` — the names Spark's reader skips, such as a staging root. With
+    ``hours`` only those hour directories are listed:
     one ``globStatus`` per calendar day, so the cost follows the window,
     not the store — the reference's manifest lookup returns just the
     window's chunks the same way (lambda_handler.py:313-373). The glob
@@ -327,10 +398,14 @@ def list_partition_files(
     if not fs.exists(root):
         return []
     if hours is None:
+        prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
         statuses = []
         it = fs.listFiles(root, True)  # recursive
         while it.hasNext():
-            statuses.append(it.next())
+            status = it.next()
+            rel = status.getPath().toString()[len(prefix):]
+            if not any(seg.startswith((".", "_")) for seg in rel.split("/")):
+                statuses.append(status)
     else:
         base = _GLOB_SPECIAL.sub(r"\\\g<0>", path.rstrip("/"))
         statuses = []
@@ -349,76 +424,58 @@ def list_partition_files(
 
 
 @_bumps_generation
-def compact_store(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_to_compact: int = 2,
-    _wrap_fs=None,
-) -> list[str]:
-    """Small-file compaction for the hour-partitioned store: rewrite any
-    hour partition whose parquet files are numerous and under-sized into
-    ~``target_file_bytes`` files. Streaming ingest (one file per
+def compact_store(spark: SparkSession, path: str, _wrap_fs=None) -> list[str]:
+    """Small-file compaction for the hour-partitioned store: rewrite every
+    partition dir that holds more than ``ceil(bytes / TARGET_FILE_BYTES)``
+    parquet files into at most that many. Streaming ingest (one file per
     micro-batch per task) fragments partitions; thousands of tiny files
     cost a scan task each and overwhelm file listing at 100 TB — the
     fix every production lake runs on a schedule.
 
-    Per-partition and idempotent: each selected hour is read, coalesced
-    to ``ceil(bytes/target)`` files, written to a staging dir, then
-    swapped in with a data-preserving two-rename protocol: the live dir
-    is renamed to ``._compact_bak`` first, the staging dir renamed into
-    place, and only then is the backup deleted (each rename is atomic
-    per directory on HDFS-like stores; the pair is not, but a crash at
-    any point leaves the rows recoverable in exactly one of live /
-    staging / backup — never lost). On entry, orphaned ``._compact_tmp``
-    / ``._compact_bak`` dirs from a previous crash are rolled back or
-    removed, so a crashed run heals on the next invocation. Readers must
-    not scan the store concurrently with compaction (they could observe
-    a partition mid-swap) — same contract as any file-level rewrite
-    without a table format's snapshot isolation; use Delta/Iceberg
-    commit protocols when concurrent readers are required.
-    Untouched partitions keep their files byte-identical. Returns the
-    rewritten partition paths.
+    One listing selects the dirs, which are read as one relation, hashed
+    into at most their file count each, and rewritten by
+    :func:`_rewrite_partitions`. The partition keys come from the dir
+    names: ``year/…/hour``, or ``batch_id/…`` for a store written by
+    :func:`fresco_hpc_spark.streaming.watcher.exactly_once_store_writer`.
+    Returns the rewritten dir paths.
     """
     import math
 
-    sc = spark.sparkContext
-    fs_conf = sc._jsc.hadoopConfiguration()
-
-    def _jp(p: str):
-        return sc._jvm.org.apache.hadoop.fs.Path(p)
-
-    root = _jp(path)
-    fs = root.getFileSystem(fs_conf)
-    if _wrap_fs is not None:
-        # test seam: Hadoop FileSystems signal most failures by RETURNING
-        # FALSE, and only a wrapper can force that branch deterministically
-        # (test_planner pins that a false rename aborts before any delete)
-        fs = _wrap_fs(fs)
-    if not fs.exists(root):
-        return []
-    _heal_crashed_swaps(fs, _jp, path)
-
-    per_part: dict[str, list[tuple[str, int]]] = defaultdict(list)
+    fs, _jp = _open_store(spark, path, _wrap_fs)
+    base = path.rstrip("/")
+    prefix = fs.makeQualified(_jp(base)).toString().rstrip("/") + "/"
+    per_dir: dict[str, list[int]] = defaultdict(lambda: [0, 0])
     for f, size in list_partition_files(spark, path):
-        part_dir = f.rsplit("/", 1)[0]
-        per_part[part_dir].append((f, size))
-    rewritten: list[str] = []
-    for part_dir, files in sorted(per_part.items()):
-        total = sum(s for _, s in files)
-        n_target = max(1, math.ceil(total / target_file_bytes))
-        if len(files) < min_files_to_compact or len(files) <= n_target:
-            continue
-        (
-            spark.read.parquet(part_dir)
-            .coalesce(n_target)
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            .parquet(part_dir + STAGING_SUFFIX)
-        )
-        _swap_partition_in(fs, _jp, part_dir)
-        rewritten.append(part_dir)
-    return rewritten
+        stats = per_dir[f[len(prefix):].rsplit("/", 1)[0]]
+        stats[0] += 1
+        stats[1] += size
+    n_target = {
+        rel: n
+        for rel, (files, size) in sorted(per_dir.items())
+        if files > (n := max(1, math.ceil(size / TARGET_FILE_BYTES)))
+    }
+    if not n_target:
+        return []
+    rels = list(n_target)
+    part_cols = [seg.split("=", 1)[0] for seg in rels[0].split("/")]
+    # mergeSchema: one file's footer must not decide the columns of
+    # every dir read here, or a column some dirs lack would be dropped
+    df = (
+        spark.read.option("basePath", base)
+        .option("mergeSchema", "true")
+        .parquet(*[f"{base}/{rel}" for rel in rels])
+    )
+    rel_of_row = F.concat_ws(
+        "/", *[F.concat(F.lit(f"{c}="), F.col(c).cast("string")) for c in part_cols]
+    )
+    files_of_rel = F.create_map(
+        *[F.lit(x) for rel, n in n_target.items() for x in (rel, n)]
+    )
+    bucket = F.pmod(F.hash(*df.columns), files_of_rel[rel_of_row])
+    return _rewrite_partitions(
+        fs, _jp, path, df.repartition(*part_cols, bucket), part_cols, rels,
+        may_empty=False,
+    )
 
 
 @_bumps_generation
@@ -465,19 +522,12 @@ def merge_into_store(
 
     Mechanics: one partition-pruned read of the touched hours, one
     null-safe anti-join on (key, hour), one union with the upsert
-    rows, one partitioned write to a hidden staging root (``.``-prefix
-    dirs are invisible to Spark/Hive readers), then each touched hour
-    is swapped in with the same checked two-rename protocol and
-    crash-healer as :func:`compact_store` — a crash at any point
-    leaves every row recoverable and the next run (merge or compact)
-    heals it. An hour whose rows are all deleted swaps in an EMPTY
-    directory (not a backup-then-delete, which the healer would
-    resurrect). The touched-hour list is collected driver-side: a CDC
+    rows, then :func:`_rewrite_partitions` writes the result once and
+    swaps each touched hour in (crash-safe and self-healing as described
+    there). An hour whose rows are all deleted swaps in an EMPTY
+    directory. The touched-hour list is collected driver-side: a CDC
     batch touches a bounded set of hours by construction (same
-    driver-side bound as the compactor's partition listing). Readers
-    must not scan concurrently with the swap — the same contract as
-    compact_store; use a table format's snapshot isolation when
-    concurrent readers are required.
+    driver-side bound as the compactor's partition listing).
 
     ``zorder_cols`` re-applies :func:`zorder_by` clustering to the
     rewritten hour partitions (VERDICT r9 item 7): a store written
@@ -504,16 +554,7 @@ def merge_into_store(
 
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    sc = spark.sparkContext
-    fs_conf = sc._jsc.hadoopConfiguration()
-
-    def _jp(p: str):
-        return sc._jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = _jp(path).getFileSystem(fs_conf)
-    if _wrap_fs is not None:
-        fs = _wrap_fs(fs)
-    _heal_crashed_swaps(fs, _jp, path)
+    fs, _jp = _open_store(spark, path, _wrap_fs)
 
     # Partition columns FIRST: row identity is (key, hour), so both the
     # ambiguity check and the last-writer-wins window must see the hour.
@@ -643,32 +684,10 @@ def merge_into_store(
             .drop("_zkey")
         )
 
-    staging_root = path.rstrip("/") + "/._merge_tmp_root"
-    if fs.exists(_jp(staging_root)):
-        _must(fs.delete(_jp(staging_root), True), f"delete stale {staging_root}")
-    (
-        merged.write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .option("compression", "snappy")
-        .parquet(staging_root)
+    rels = [
+        "/".join(f"{c}={v}" for c, v in zip(PARTITION_COLS, t))
+        for t in sorted(touched)
+    ]
+    return _rewrite_partitions(
+        fs, _jp, path, merged, PARTITION_COLS, rels, may_empty=True
     )
-    swapped: list[str] = []
-    for t in sorted(touched):
-        rel = "/".join(f"{c}={v}" for c, v in zip(PARTITION_COLS, t))
-        part_dir = f"{path.rstrip('/')}/{rel}"
-        src = f"{staging_root}/{rel}"
-        staging = part_dir + STAGING_SUFFIX
-        parent = _jp(part_dir).getParent()
-        if not fs.exists(parent):
-            _must(fs.mkdirs(parent), f"mkdirs {parent}")
-        if fs.exists(_jp(src)):
-            _must(fs.rename(_jp(src), _jp(staging)), f"rename {src} -> {staging}")
-        else:
-            # every row of this hour was deleted: swap in an empty dir
-            # (a rename-away-and-delete would look like a crashed swap
-            # to the healer, which would resurrect the rows)
-            _must(fs.mkdirs(_jp(staging)), f"mkdirs {staging}")
-        _swap_partition_in(fs, _jp, part_dir)
-        swapped.append(part_dir)
-    _must(fs.delete(_jp(staging_root), True), f"delete {staging_root}")
-    return swapped

@@ -94,7 +94,7 @@ def zipf_corpus(
     split on document-frequency distribution — prefix filtering wins on
     Zipfian df (natural text), the plain token join on near-uniform df.
     This generator makes that crossover measurable inside the bench
-    suite instead of only in tools/stress_zipf_jaccard.py.
+    suite (the larger-corpus crossover is recorded in SCALE.md).
 
     Token order within ``text`` follows ``collect_list`` and is NOT
     deterministic across runs; consumers must be order-insensitive

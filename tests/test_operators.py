@@ -613,8 +613,8 @@ def test_salted_join_equals_plain_join_on_skewed_input(spark):
     a deliberately skewed input (half the left rows on ONE key, plus
     keys with no right match and right keys with no left match) the
     salted inner AND left joins equal the plain joins as multisets,
-    not just in count. The head-to-head task-bound measurement lives in
-    tools/stress_r8.py / SCALE.md."""
+    not just in count. The head-to-head task-bound measurement is
+    recorded in SCALE.md."""
     from pyspark.sql import functions as F
 
     from fresco_hpc_spark.operators import salted_join

@@ -254,8 +254,19 @@ def test_compact_store_heals_crashed_swap(spark, tmp_path):
     if len(parts) >= 4:
         shutil.copytree(parts[3], parts[3] + "._compact_tmp")
         shutil.move(parts[3], parts[3] + "._compact_bak")
+    # crash case 5: a merge's staging root left behind, holding a
+    # fragmented hour — hidden from readers, so compaction must neither
+    # rewrite nor return it, and the healer discards it
+    stale = Path(store) / "._merge_tmp_root" / "year=2024/month=8/day=1/hour=10"
+    stale.mkdir(parents=True)
+    some = sorted(Path(store).glob("year=*/month=*/day=*/hour=*/*.parquet"))[:3]
+    for i, f in enumerate(some):
+        shutil.copy(f, stale / f"part-{i}.parquet")
+    assert len(list(stale.glob("*.parquet"))) == 3
 
-    compact_store(spark, store)
+    rewritten = compact_store(spark, store)
+    assert not [p for p in rewritten if "._merge_tmp_root" in p]
+    assert not (Path(store) / "._merge_tmp_root").exists()
     for p in parts[:4]:
         assert Path(p).is_dir()
         assert not Path(p + "._compact_bak").exists()
@@ -339,6 +350,144 @@ def test_compact_store_false_rename_aborts_before_any_delete(spark, tmp_path):
     assert rewritten
     assert not list(Path(store).glob("**/*._compact_tmp"))
     assert read_partitioned_store(spark, store).count() == before
+
+
+def _fragmented_store(spark, path, hours, rows_per_hour=40, files=4):
+    """A store of ``hours`` consecutive hours from 2024-03-01 00:00, each
+    split over up to ``files`` parquet files."""
+    from pyspark.sql import functions as F
+
+    from fresco_hpc_spark.plans import write_partitioned_store
+
+    df = spark.range(hours * rows_per_hour).select(
+        (
+            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
+            + F.make_interval(hours=(F.col("id") % hours).cast("int"))
+        ).alias("time"),
+        F.col("id").alias("event_id"),
+        F.rand(7).alias("value"),
+    )
+    write_partitioned_store(df.repartition(files), path)
+    return df
+
+
+def test_compact_store_runs_a_fixed_number_of_jobs(spark, tmp_path):
+    """One staging write for every fragmented partition: compacting 12
+    hours runs as many Spark jobs as compacting 3 (a per-partition
+    rewrite runs one write job per hour)."""
+    from fresco_hpc_spark.plans import compact_store
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    for hours in (3, 12):
+        store = str(tmp_path / f"store{hours}")
+        _fragmented_store(spark, store, hours)
+        group = f"compact-{hours}"
+        sc.setJobGroup(group, f"compact {hours} hours")
+        try:
+            assert len(compact_store(spark, store)) == hours
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[hours] = len(tracker.getJobIdsForGroup(group))
+    assert 0 < jobs[3] == jobs[12], jobs
+
+
+def test_compact_store_splits_a_large_hour_by_target_bytes(spark, tmp_path, monkeypatch):
+    """A partition larger than the target compacts to at most
+    ceil(bytes / target) files, a small one to a single file, with the
+    rows unchanged; the result is stable, so a second run returns []."""
+    import math
+    import os
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from fresco_hpc_spark.plans import PARTITION_COLS, compact_store, read_partitioned_store
+    from fresco_hpc_spark.plans import store as store_mod
+
+    store = str(tmp_path / "store")
+    # random doubles barely compress, so bytes stay proportional to rows
+    big = spark.range(60_000).select(
+        F.to_timestamp(F.lit("2024-03-01 05:00:00")).alias("time"),
+        F.col("id").alias("event_id"),
+        F.rand(3).alias("value"),
+    )
+    small = big.limit(600).withColumn(
+        "time", F.to_timestamp(F.lit("2024-03-01 06:00:00"))
+    )
+    store_mod.write_partitioned_store(big.unionByName(small).repartition(6), store)
+    before = sorted(read_partitioned_store(spark, store).drop(*PARTITION_COLS).collect())
+
+    def files(hour):
+        return list(Path(store).glob(f"year=2024/month=3/day=1/hour={hour}/*.parquet"))
+
+    big_bytes = sum(os.path.getsize(f) for f in files(5))
+    target = int(big_bytes / 2.5)
+    monkeypatch.setattr(store_mod, "TARGET_FILE_BYTES", target)
+    assert len(files(5)) == 6 and len(files(6)) > 1
+    rewritten = compact_store(spark, store)
+    assert sorted(p.rsplit("/", 1)[1] for p in rewritten) == ["hour=5", "hour=6"]
+    assert len(files(5)) <= math.ceil(big_bytes / target) == 3
+    assert len(files(6)) == 1
+    after = read_partitioned_store(spark, store).drop(*PARTITION_COLS).collect()
+    assert sorted(after) == before
+    assert compact_store(spark, store) == []
+
+
+def test_compact_store_batch_id_layout(spark, tmp_path):
+    """A store written by exactly_once_store_writer has a leading
+    ``batch_id=`` partition level: compaction takes its keys from the dir
+    names and folds each batch hour to one file with the same rows."""
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from fresco_hpc_spark.plans import compact_store, read_partitioned_store
+    from fresco_hpc_spark.streaming.watcher import exactly_once_store_writer
+
+    store = str(tmp_path / "store")
+    write = exactly_once_store_writer(store)
+    for batch in (0, 1):
+        rows = spark.range(400).select(
+            (
+                F.to_timestamp(F.lit(f"2024-03-01 0{batch}:00:00"))
+                + F.make_interval(hours=(F.col("id") % 2).cast("int"))
+            ).alias("time"),
+            (F.col("id") + 1000 * batch).alias("event_id"),
+        )
+        write(rows.repartition(3), batch)
+    dirs = sorted(Path(store).glob("batch_id=*/year=*/month=*/day=*/hour=*"))
+    assert len(dirs) == 4
+    assert all(len(list(d.glob("*.parquet"))) == 3 for d in dirs)
+    before = sorted(read_partitioned_store(spark, store).collect())
+
+    rewritten = compact_store(spark, store)
+    assert sorted(rewritten) == sorted(f"{store}/{d.relative_to(store)}" for d in dirs)
+    assert all(len(list(d.glob("*.parquet"))) == 1 for d in dirs)
+    assert sorted(read_partitioned_store(spark, store).collect()) == before
+    assert compact_store(spark, store) == []
+
+
+def test_compact_store_keeps_a_column_only_some_dirs_have(spark, tmp_path):
+    """The fragmented dirs are read as ONE relation: a column that only
+    a later append wrote (to one hour) must survive compaction rather
+    than be dropped by whichever file's footer sets the schema."""
+    from pyspark.sql import functions as F
+
+    from fresco_hpc_spark.plans import compact_store, read_partitioned_store
+
+    store = str(tmp_path / "store")
+    df = _fragmented_store(spark, store, hours=2)
+    wider = df.filter(F.col("event_id") % 2 == 1).withColumn("extra", F.col("event_id") * 10)
+    write_partitioned_store(wider.repartition(2), store, mode="append")
+
+    assert len(compact_store(spark, store)) == 2
+    back = read_partitioned_store(spark, store)
+    assert "extra" in back.columns
+    assert back.filter(F.col("extra").isNotNull()).count() == wider.count()
+    assert back.filter(F.col("extra") != F.col("event_id") * 10).count() == 0
 
 
 def _merge_fixture(spark, tmp_path):
