@@ -318,8 +318,8 @@ def q_value_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     former per-event-type ``cume_dist`` window put ~n/5 rows on ONE
     task (a 20 TB single-task sort at 100 TB); grouped_value_cdf
     computes the identical (event_type, cdf, value_at) relation via
-    distributed order statistics (operators/percentiles.py — range
-    shuffle + tiny offsets relation, no window partitioned by the bare
+    distributed order statistics (operators/percentiles.py — value
+    buckets + small offsets relation, no window partitioned by the bare
     group). CDF is over non-null values (explicit in the oracle too:
     Spark orders NULL first, DuckDB last, so a NULL-inclusive cume_dist
     is engine-ambiguous; events.value is non-null in this corpus)."""
@@ -3503,8 +3503,8 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair within 3 positions of the global sorted order, with gap and
     edit distance — the key-agnostic complement of fuzzy_match_parts'
     first-token blocking. Exact global ordinals with NO single-task
-    sort: range shuffle + tiny-pid-relation offsets, then ONE equi-join
-    on ordinal+gap (no boundary cases)."""
+    sort: the rank core's per-bucket offsets, then ONE equi-join on
+    ordinal+gap (no boundary cases)."""
     from fresco_hpc_spark.operators import sorted_neighborhood_pairs
 
     return sorted_neighborhood_pairs(

@@ -332,62 +332,21 @@ def sorted_neighborhood_pairs(
     runs both and unions the candidates.
 
     Distributed EXACTLY, with no global-sort single task: each distinct
-    name gets its true global ordinal from a range shuffle — per-pid
-    counts roll into offsets via a window over the TINY pid relation
-    (≤ shuffle-partitions rows), and ``ordinal = offset + local
-    row_number`` inside each range partition. Neighbor pairs are then
-    ONE equi-join on ``ordinal + gap`` after exploding gap ∈ 1..window
-    — no boundary cases, no window wider than a range partition,
-    pairs spanning any number of tiny partitions fall out of the join.
-
-    The range exchange feeds two consumers (the per-pid counts and the
-    ordinal assignment); like ``grouped_cume_counts`` this REFUSES to
-    run when both exchange-reuse paths are disabled — a twice-
-    materialized range exchange may sample different partition
-    boundaries and corrupt the ordinals (the executed-plan
-    ReusedExchange is pinned in test_plan_quality).
+    name's global ordinal is its ``_cume`` from the grouped rank core
+    (``percentiles.grouped_cume_counts`` with no group key) — names are
+    distinct, so the count of names ≤ it is its 1-based position.
+    Neighbor pairs are then ONE equi-join on ``ordinal + gap`` after
+    exploding gap ∈ 1..window — no boundary cases, no window wider than
+    one rank bucket.
     """
-    from pyspark.sql import Window
+    from fresco_hpc_spark.operators.percentiles import grouped_cume_counts
 
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    spark = df.sparkSession
-    reuse = spark.conf.get("spark.sql.exchange.reuse.enabled", "true")
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if str(reuse).lower() != "true" and str(adaptive).lower() != "true":
-        raise ValueError(
-            "sorted_neighborhood_pairs requires exchange reuse "
-            "(spark.sql.exchange.reuse.enabled or "
-            "spark.sql.adaptive.enabled): without it the two consumers "
-            "of the range exchange could see different partition "
-            "boundaries and produce wrong ordinals"
-        )
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     norm = F.lower(F.trim(F.col(name_col)))
-    names = (
-        df.select(norm.alias("name"))
-        .filter(F.col("name").isNotNull() & (F.col("name") != ""))
-        .distinct()
-    )
-    ranged = names.repartitionByRange(p, "name").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    part = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_pc"))
-    w_off = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # the offsets window is global BUT over the ≤ p-row pid relation —
-    # bounded by a config constant, not the data
-    offsets = part.select(
-        "_pid", F.coalesce(F.sum("_pc").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_local = Window.partitionBy("_pid").orderBy("name")
-    ranked = (
-        ranged.join(offsets, "_pid")
-        .select(
-            "name",
-            (F.col("_off") + F.row_number().over(w_local)).alias("_ord"),
-        )
+    names = df.select(norm.alias("name")).filter(F.col("name") != "").distinct()
+    ranked = grouped_cume_counts(names, [], "name").select(
+        F.col("_v").alias("name"), F.col("_cume").alias("_ord")
     )
     a = ranked.select(F.col("name").alias("name_a"), F.col("_ord"))
     b = ranked.select(F.col("name").alias("name_b"), F.col("_ord").alias("_ord_b"))

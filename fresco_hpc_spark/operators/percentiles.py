@@ -20,13 +20,16 @@ value into ONE reducer's buffer — O(n) memory on a single node, dead at
 ``distributed_exact_percentiles``: range-repartition the column, count
 per range bucket, then sort ONLY the buckets that contain the target
 order statistics (≤ 2 per fraction). No node ever holds more than one
-bucket; the second pass touches ~(#fractions · n/P) rows. Per-GROUP
-quartiles (profile_agg) keep the buffer aggregate — groups are small by
-construction there.
+bucket; the second pass touches ~(#fractions · n/P) rows. Grouped
+order statistics (CDFs, per-group percentiles, the KS family,
+quantile normalization) share one lazy core, :func:`_rank_core`, whose
+buckets are a pure function of the data, so its result does not
+depend on which exchanges Spark reuses.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, Window
@@ -56,6 +59,14 @@ def distributed_exact_percentiles(
 
     Returns driver-side floats (None per fraction when the input is
     empty) — the callers inline them as literal bounds / 1-row frames.
+
+    It stays separate from the lazy grouped core (:func:`_rank_core`)
+    for two reasons. The persist pins the range buckets, so the two
+    passes see one bucket assignment. And it is the cheaper path on
+    the dashboard's windows: routed through the grouped core under a
+    constant key, the global trim measured 1.44/1.74/1.71 CPU-s per
+    chart against 0.76/0.93/1.25 for this function (three 12-request
+    sets over a 1,200-row, 6-hour window, identical rows).
     """
     spark = df.sparkSession
     vals = df.select(F.col(col).alias("_v")).filter(F.col("_v").isNotNull())
@@ -107,14 +118,126 @@ def distributed_exact_percentiles(
         ranged.unpersist()
 
 
+# Sampled values per rank bucket: a bucket's share of its key then
+# varies by about 1/sqrt(16) around 1/P.
+_SAMPLE_PER_BUCKET = 16
+
+
+def _on_keys(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """Join ``right`` onto ``left`` on ``keys``, NULL-SAFE: a NULL group
+    is a real group (window PARTITION BY already treats it as one), and
+    a plain equi-join would silently drop its rows. ``right``'s copies
+    of the keys are dropped. With no keys ``right`` is one row, attached
+    as a scalar subquery rather than a cross join."""
+    if not keys:
+        row = right.select(F.struct(*right.columns).alias("_r")).scalar()
+        return left.select("*", *[row[c].alias(c) for c in right.columns])
+    r = right.select(
+        *[F.col(c).alias(f"_k{i}") for i, c in enumerate(keys)],
+        *[c for c in right.columns if c not in keys],
+    )
+    cond = functools.reduce(
+        lambda a, b: a & b,
+        [F.col(c).eqNullSafe(F.col(f"_k{i}")) for i, c in enumerate(keys)],
+    )
+    return left.join(r, cond, how).drop(*[f"_k{i}" for i in range(len(keys))])
+
+
+def _value_buckets(dv: DataFrame, keys: list[str]) -> DataFrame:
+    """``dv`` plus ``_b``, the rank core's bucket: a pure function of
+    the row and of per-key edges built only from deterministic
+    operators.
+
+    1. Per key, a sample of about ``_SAMPLE_PER_BUCKET · P`` distinct
+       values (P = shuffle partitions): a row is kept when
+       ``pmod(xxhash64(keys, _v), #distinct) < _SAMPLE_PER_BUCKET · P``,
+       so a small key is sampled whole.
+    2. Per key, every ``max(_SAMPLE_PER_BUCKET, ⌈m/P⌉)``-th value of the
+       sorted sample (m values) is an edge: at most P − 1 edges, and a
+       key with few values gets few buckets.
+    3. ``_b = #{edges e : e < _v}`` (:func:`reference_bin_expr`), which
+       is non-decreasing in ``_v`` within a key."""
+    p = int(dv.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    distinct = dv.groupBy(*keys).agg(F.count(F.lit(1)).alias("_d"))
+    sample = (
+        _on_keys(dv, distinct, keys)
+        .filter(
+            F.pmod(F.xxhash64(*keys, "_v"), F.col("_d"))
+            < _SAMPLE_PER_BUCKET * p
+        )
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("_v")).alias("_s"))
+    )
+    m = F.size("_s")
+    stride = F.greatest(F.lit(_SAMPLE_PER_BUCKET), F.ceil(m / p))
+    edges = sample.select(
+        *keys,
+        F.filter("_s", lambda _, i: ((i + 1) % stride == 0) & (i + 1 < m)).alias(
+            "_e"
+        ),
+    )
+    b = F.coalesce(reference_bin_expr(F.col("_e"), F.col("_v")), F.lit(0))
+    return _on_keys(dv, edges, keys, "left").select(*dv.columns, b.alias("_b"))
+
+
+def _rank_core(dv: DataFrame, keys: list[str]) -> DataFrame:
+    """The order-statistics core: from the tie-collapsed
+    ``(keys…, _v, _cnt)`` relation (one row per key and distinct value)
+    to ``(keys…, _v, _cnt, _cume, _n)``, where ``_cume`` counts the
+    key's rows with value ≤ ``_v`` and ``_n`` is the key's size. With
+    no keys the whole relation is one group. Rows with ``_cnt`` = 0 add
+    nothing to ``_cume`` or ``_n`` but still get an output row — the KS
+    operators' probe rows. Other input columns are not carried.
+
+    Values go to buckets (:func:`_value_buckets`). Per-(key, bucket)
+    subtotals roll into offsets and key sizes through windows over
+    that small relation; ``_cume = offset + running count`` inside one
+    (key, bucket) slice, the widest window on the data. The bucket is a
+    pure function of the data, so the subtotal branch and the data
+    branch agree however often Spark evaluates them, with or without
+    exchange reuse. Nothing runs at construction."""
+    bucketed = _value_buckets(dv, keys)
+    w_key = Window.partitionBy(*keys)
+    offsets = (
+        bucketed.groupBy(*keys, "_b")
+        .agg(F.sum("_cnt").alias("_bc"))
+        .select(
+            *keys,
+            "_b",
+            F.coalesce(
+                F.sum("_bc").over(
+                    w_key.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ).alias("_off"),
+            F.sum("_bc").over(w_key).alias("_n"),
+        )
+    )
+    w_local = (
+        Window.partitionBy(*keys, "_b")
+        .orderBy("_v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return _on_keys(bucketed, offsets, [*keys, "_b"]).select(
+        *keys,
+        "_v",
+        "_cnt",
+        (F.col("_off") + F.sum("_cnt").over(w_local)).alias("_cume"),
+        "_n",
+    )
+
+
 def grouped_cume_counts(
     df: DataFrame, group_cols: list[str], value_col: str
 ) -> DataFrame:
     """Per-group cumulative value counts WITHOUT a per-group sort — the
-    fully distributed building block under :func:`grouped_value_cdf` and
-    :func:`grouped_exact_percentiles` (VERDICT r6 items 1/7: the
-    ``cume_dist`` / ``ntile`` window shape puts each group on ONE task,
-    a 20 TB single-task sort at 100 TB with few groups).
+    fully distributed building block under :func:`grouped_value_cdf`,
+    :func:`grouped_exact_percentiles`, :func:`quantile_normalize` and
+    ``weighted_sample_k`` (VERDICT r6 items 1/7: the ``cume_dist`` /
+    ``ntile`` window shape puts each group on ONE task, a 20 TB
+    single-task sort at 100 TB with few groups).
 
     Returns one row per (group, DISTINCT non-null value):
     ``group_cols…, _v, _cnt`` (rows tied at this value), ``_cume``
@@ -123,139 +246,18 @@ def grouped_cume_counts(
     NULL first and DuckDB last, so any NULL-inclusive contract is
     engine-ambiguous; callers wanting NULL handling coalesce first.
 
-    How it stays distributed (no driver collect, unlike the global
-    :func:`distributed_exact_percentiles`):
-
-    1. Collapse ties: ``groupBy(group, value).count()`` — map-side
-       partial agg; output ≤ #distinct values.
-    2. Range-shuffle on ``(group…, value)`` into P ordered partitions —
-       a group may SPAN partitions, but values within it stay globally
-       ordered across consecutive pids.
-    3. Per-(pid, group) subtotal — a relation of ≤ P + G − 1 rows
-       (each range partition holds contiguous groups). Offsets and
-       group sizes come from a window over THIS tiny relation,
-       partitioned by group with ≤ P rows per partition.
-    4. Join the offsets back on (pid, group) and take the LOCAL
-       cumulative sum inside each (pid, group) slice — every window
-       partition is bounded by one range partition's rows, never by a
-       group's size. ``_cume = offset + local running count``.
-
-    The range exchange feeds both the subtotal branch and the join
-    probe; Catalyst's ReuseExchange (or AQE's stage reuse) computes it
-    once, so both sides see identical ``spark_partition_id``
-    assignments. That reuse is LOAD-BEARING (r7 review): a twice-
-    materialized range exchange samples its partition boundaries with
-    rdd-id-derived seeds and the two branches could disagree on _pid,
-    silently corrupting offsets. Exchange reuse is on by default in
-    every Spark deployment; this function REFUSES to build the plan
-    when a session has turned both reuse paths off, rather than risk a
-    wrong answer, and the executed-plan ReusedExchange node is pinned
-    in test_plan_quality. No window in the plan is partitioned by the
-    bare group key (also plan-pinned).
+    Ties collapse first (``groupBy(group, value).count()``, a map-side
+    partial agg), then :func:`_rank_core` ranks the distinct values
+    with no driver collect and no window wider than one (group,
+    bucket) slice.
     """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    reuse = spark.conf.get("spark.sql.exchange.reuse.enabled", "true")
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if str(reuse).lower() != "true" and str(adaptive).lower() != "true":
-        raise ValueError(
-            "grouped_cume_counts requires exchange reuse "
-            "(spark.sql.exchange.reuse.enabled or spark.sql.adaptive."
-            "enabled): without it the two consumers of the range "
-            "exchange could see different partition boundaries and "
-            "produce silently wrong offsets"
-        )
     dv = (
         df.select(*group_cols, F.col(value_col).alias("_v"))
         .filter(F.col("_v").isNotNull())
         .groupBy(*group_cols, "_v")
         .agg(F.count(F.lit(1)).alias("_cnt"))
     )
-    return grouped_cume_from_counts(dv, group_cols)
-
-
-def grouped_cume_from_counts(
-    dv: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """The post-tie-collapse core of :func:`grouped_cume_counts`,
-    exposed for callers that build the ``(group…, _v, _cnt)`` relation
-    themselves — notably :func:`ks_vs_rest`, which DENSIFIES it with
-    zero-count probe rows so the running cume materializes the group's
-    CDF at every corpus-distinct value (a zero row adds nothing to the
-    cumulative sum but emits an output row carrying F_g(v)·n_g
-    exactly). Same range-exchange reuse contract and null-safe group
-    join as the public wrapper; ``_n`` sums only real counts, so probe
-    rows never inflate group sizes.
-
-    The input schema is EXACTLY ``(group_cols…, _v, _cnt)`` by design —
-    do not extend this function with pass-through columns. A column the
-    offset-subtotal branch doesn't consume gets column-pruned BEFORE
-    the range exchange on that branch only, the two exchange subtrees
-    stop being identical, ReuseExchange no longer fires, and each
-    branch samples its own partition boundaries → silently corrupt
-    offsets (found the hard way in r8: a carried probe marker shifted
-    cumes by whole partitions at shuffle_partitions=8). Callers that
-    need row markers (:func:`ks_vs_rest_quantized`) join their marker
-    relation back onto the output instead."""
-    from pyspark.sql import Window
-
-    spark = dv.sparkSession
-    reuse = spark.conf.get("spark.sql.exchange.reuse.enabled", "true")
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if str(reuse).lower() != "true" and str(adaptive).lower() != "true":
-        raise ValueError(
-            "grouped_cume_from_counts requires exchange reuse "
-            "(spark.sql.exchange.reuse.enabled or spark.sql.adaptive."
-            "enabled): without it the two consumers of the range "
-            "exchange could see different partition boundaries and "
-            "produce silently wrong offsets"
-        )
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = dv.repartitionByRange(
-        p, *[F.col(c) for c in group_cols], F.col("_v")
-    ).withColumn("_pid", F.spark_partition_id())
-    part = ranged.groupBy("_pid", *group_cols).agg(F.sum("_cnt").alias("_pc"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_n = Window.partitionBy(*group_cols)
-    offsets = part.select(
-        "_pid",
-        *group_cols,
-        F.coalesce(F.sum("_pc").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_pc").over(w_n).alias("_n"),
-    )
-    # AQE broadcasts the (≤ P + G − 1)-row offsets side at realistic G;
-    # at extreme group cardinality it degrades to a shuffle of the
-    # DISTINCT-value relation, which the local-cume window needs anyway.
-    # The join is NULL-SAFE on the group keys: a NULL group is a
-    # legitimate group (window PARTITION BY already treats it as one),
-    # and a plain equi-join would silently drop its rows — the same
-    # r6-review class of bug fixed in cap_per_group / knn_graph_blocked.
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    off_renamed = offsets.select(
-        F.col("_pid").alias("_o_pid"),
-        *[F.col(c).alias(f"_o_{i}") for i, c in enumerate(group_cols)],
-        "_off",
-        "_n",
-    )
-    cond = F.col("_pid") == F.col("_o_pid")
-    for i, c in enumerate(group_cols):
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_o_{i}"))
-    return ranged.join(off_renamed, cond).select(
-        *group_cols,
-        "_v",
-        "_cnt",
-        (F.col("_off") + F.sum("_cnt").over(w_local)).alias("_cume"),
-        "_n",
-    )
+    return _rank_core(dv, group_cols)
 
 
 def grouped_value_cdf(
@@ -324,12 +326,9 @@ def grouped_exact_percentiles_from_counts(
 ) -> DataFrame:
     """:func:`grouped_exact_percentiles` for callers that already hold
     the tie-collapsed ``(group…, _v, _cnt)`` relation (the KS operators'
-    counts hub): skips re-aggregating the raw rows, so the tie-collapse
-    is computed once per call and shared by lineage, not merely by
-    AQE stage reuse. Identical output and interpolation arithmetic."""
-    return _percentile_extract(
-        grouped_cume_from_counts(dv, group_cols), group_cols, fractions
-    )
+    counts hub): skips re-aggregating the raw rows. Identical output
+    and interpolation arithmetic."""
+    return _percentile_extract(_rank_core(dv, group_cols), group_cols, fractions)
 
 
 def _percentile_extract(
@@ -751,7 +750,7 @@ def ks_vs_rest_quantized(
     per-group data (emitted as a column), not a constant.
 
     Exactness of what IS computed: probe-point CDFs are exact integer
-    cumulative counts from :func:`grouped_cume_from_counts` fed the
+    cumulative counts from the rank core (:func:`_rank_core`) fed the
     tie-collapsed counts relation with zero-count probe rows merged in
     (a probe tied with a data value collapses into that row, so the
     running sum includes the tie's mass). The D̂ division and argmax
@@ -761,8 +760,8 @@ def ks_vs_rest_quantized(
     Scale shape: one tie-collapse shuffle, the grouped distributed
     order-statistics machinery for the per-group edges (fed the
     tie-collapsed counts hub directly), group cumes, and pooled cumes,
-    and G·bins-sized equi-joins — no window over more than a range
-    partition, no driver collect beyond the ``bins`` pooled literals
+    and G·bins-sized equi-joins — no window over more than one (group,
+    bucket) slice, no driver collect beyond the ``bins`` pooled literals
     (bounded by the parameter, same contract as ``quantile_bucket``).
 
     Output: ``group_col, n_group, ks_d, ks_at, ks_err_bound`` — the
@@ -787,15 +786,13 @@ def ks_vs_rest_quantized(
     pooled_counts = counts.groupBy("_v").agg(F.sum("_cnt").alias("_cnt"))
     # Pooled equi-depth edges, collected as driver literals (bounded by
     # ``bins`` — the documented two-phase contract, as quantile_bucket).
-    # ONE job through the grouped machinery under a constant group
+    # ONE job through the rank core with no group key
     # (identical interpolation arithmetic, see _percentile_extract)
     # instead of distributed_exact_percentiles' persist + two collects
     # (r15: the operator was 65 stages of scheduling latency at sf0.1 —
     # fewer jobs/driver syncs, same relations).
     pooled = grouped_exact_percentiles_from_counts(
-        pooled_counts.select(F.lit(1).alias("_all"), "_v", "_cnt"),
-        ["_all"],
-        fractions,
+        pooled_counts, [], fractions
     ).collect()
     if not pooled:
         return df.sparkSession.createDataFrame([], schema)
@@ -825,10 +822,7 @@ def ks_vs_rest_quantized(
     # value absent from the group's data still needs a cume row, and a
     # probe tied with a data value collapses into it so the cume
     # includes the tie's jump. Probe rows are then re-identified by
-    # joining the probe set back onto the OUTPUT: the machinery's input
-    # schema must stay exactly (group, _v, _cnt) — a carried marker
-    # column breaks its ReuseExchange contract (see
-    # grouped_cume_from_counts' docstring).
+    # joining the probe set back onto the output.
     combined = (
         counts.unionByName(
             probes.select("_g", "_v", F.lit(0).cast("long").alias("_cnt"))
@@ -843,7 +837,7 @@ def ks_vs_rest_quantized(
     # driver-latency-bound regime, parallel independent chains beat a
     # shorter fused serial path.
     gcume = (
-        grouped_cume_from_counts(combined, ["_g"])
+        _rank_core(combined, ["_g"])
         .join(
             probes.select(F.col("_g").alias("_gp"), F.col("_v").alias("_vp")),
             F.col("_g").eqNullSafe(F.col("_gp")) & (F.col("_v") == F.col("_vp")),
@@ -851,7 +845,7 @@ def ks_vs_rest_quantized(
         .select("_g", "_v", F.col("_cume").alias("_gc"), F.col("_n").alias("_ng"))
     )
     # pooled CDF at the GLOBAL probe-value set, via the same machinery
-    # under a constant group; _n here is the corpus total
+    # with no group key; _n here is the corpus total
     gv = probes.select("_v").distinct()
     pooled_combined = (
         pooled_counts.unionByName(
@@ -859,10 +853,9 @@ def ks_vs_rest_quantized(
         )
         .groupBy("_v")
         .agg(F.sum("_cnt").alias("_cnt"))
-        .select(F.lit(1).alias("_all"), "_v", "_cnt")
     )
     pcume = (
-        grouped_cume_from_counts(pooled_combined, ["_all"])
+        _rank_core(pooled_combined, [])
         .join(gv.select(F.col("_v").alias("_vp")), F.col("_v") == F.col("_vp"))
         .select("_v", F.col("_cume").alias("_pc"), F.col("_n").alias("_nt"))
     )
@@ -872,8 +865,7 @@ def ks_vs_rest_quantized(
         .select(
             "_g",
             "_v",
-            F.col("_ng"),
-            F.col("_nt"),
+            "_nt",
             F.abs(
                 F.col("_gc") / F.col("_ng")
                 - (F.col("_pc") - F.col("_gc"))
@@ -881,76 +873,58 @@ def ks_vs_rest_quantized(
             ).alias("_d"),
         )
     )
-    # The argmax tail stays the broadcast-join shape here (r15 measured
-    # experiment): rewriting it as a single max(struct(_d, -_v))
-    # aggregate + left join SILENTLY CORRUPTED this operator — the
-    # restructured consumer changed how DeduplicateRelations aliased
-    # the two copies of the machinery's range exchange, their canonical
-    # forms stopped matching, ReuseExchange did not fire, and each copy
-    # sampled its own partition boundaries (the r8 offsets-corruption
-    # class; big-group ks_d varied run to run and OVERSHOT the exact
-    # statistic). The exact ks_vs_rest tolerates the same rewrite (its
-    # executed plan provably reuses the exchange — pinned in
-    # test_plan_quality); this operator does not.
-    dmax = diffs.groupBy("_g", "_ng", "_nt").agg(F.max("_d").alias("_dmax"))
-    located = (
-        diffs.join(
-            F.broadcast(dmax.select(F.col("_g").alias("_gm"), "_dmax")),
-            F.col("_g").eqNullSafe(F.col("_gm")),
-        )
-        .filter(F.col("_d") == F.col("_dmax"))
-        .groupBy("_g")
-        .agg(F.min("_v").alias("_at"))
+    err = (F.col("_nt").cast("double") / (F.col("_nt") - F.col("_n"))) * (
+        F.lit(1.0 / bins) + F.lit(1.0) / F.col("_n")
     )
-    err = (
-        F.col("_nt").cast("double") / (F.col("_nt") - F.col("_ng"))
-    ) * (F.lit(1.0 / bins) + F.lit(1.0) / F.col("_ng"))
-    out = (
-        dmax.join(
-            located.select(F.col("_g").alias("_gl"), "_at"),
-            F.col("_g").eqNullSafe(F.col("_gl")),
-        )
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("_ng").cast("bigint").alias("n_group"),
-            F.round(F.col("_dmax"), round_to).alias("ks_d"),
-            F.round(F.col("_at"), round_to).alias("ks_at"),
-            F.round(err, round_to).alias("ks_err_bound"),
-        )
+    return _ks_result(diffs, counts, group_col, round_to, ks_err_bound=err)
+
+
+def _ks_result(
+    diffs: DataFrame, counts: DataFrame, group_col: str, round_to: int, **extra
+) -> DataFrame:
+    """Shared tail of the two-sample KS operators. ``diffs`` holds
+    ``_g, _v, _nt, _d`` (corpus size ``_nt``, CDF gap ``_d``) for every
+    group that has a rest-sample. The max of ``struct(_d, −_v)`` picks
+    the largest gap and, on exact-double ties, the SMALLEST value, in
+    one aggregation. The per-group sizes (``_n``, from the
+    tie-collapsed ``counts``) are the left side of a NULL-SAFE join, so
+    a group that is the whole corpus (absent from ``diffs``) reports
+    NULL statistics. ``extra`` output columns are expressions over
+    ``_n`` and ``_nt``, rounded like the statistic."""
+    best = diffs.groupBy("_g").agg(
+        F.max(F.struct("_d", (-F.col("_v")).alias("_nv"), "_nt")).alias("_s")
     )
-    whole = (
-        counts.groupBy("_g")
-        .agg(F.sum("_cnt").alias("_n"))
-        .join(
-            dmax.select(F.col("_g").alias("_gd")),
-            F.col("_g").eqNullSafe(F.col("_gd")),
-            "left_anti",
-        )
+    sizes = counts.groupBy("_g").agg(F.sum("_cnt").alias("_n"))
+    return (
+        _on_keys(sizes, best, ["_g"], "left")
+        .select("_g", "_n", "_s._d", "_s._nv", "_s._nt")
         .select(
             F.col("_g").alias(group_col),
             F.col("_n").cast("bigint").alias("n_group"),
-            F.lit(None).cast("double").alias("ks_d"),
-            F.lit(None).cast("double").alias("ks_at"),
-            F.lit(None).cast("double").alias("ks_err_bound"),
+            F.round(F.col("_d"), round_to).alias("ks_d"),
+            F.round(-F.col("_nv"), round_to).alias("ks_at"),
+            *[F.round(e, round_to).alias(k) for k, e in extra.items()],
         )
+        .orderBy(group_col)
     )
-    return out.unionByName(whole).orderBy(group_col)
 
 
-def reference_bin_expr(edges: list[float], value_col: str):
-    """The shared JVM bin-assignment expression of the one-sample KS
-    family: ``bin = #{edges e : e < value}`` (strictly below, so a value
-    tied with edge j lands in bin j−1 and counts toward F(e_j)). Values
-    above the last edge get bin = len(edges). Used identically by the
-    batch :func:`ks_vs_reference` and the streaming
-    ``streaming_ks_reference`` so both paths bin bit-identically —
-    computing the key with the SAME JVM expression on both paths is the
-    house rule that keeps batch/stream equivalence exact."""
-    edges_lit = F.array(*[F.lit(float(e)) for e in sorted(edges)])
+def reference_bin_expr(edges, value):
+    """The one bin-assignment expression: ``bin = #{edges e : e < value}``
+    (strictly below, so a value tied with edge j lands in bin j−1 and
+    counts toward F(e_j)). Values above the last edge get bin =
+    len(edges). ``edges`` is a Python list (inlined as a double-literal
+    array) or an array column; ``value`` a column or its name. Used by
+    the batch :func:`ks_vs_reference` and the streaming
+    ``streaming_ks_reference`` — computing the key with the SAME JVM
+    expression on both paths is the house rule that keeps batch/stream
+    equivalence exact — and by the rank core's buckets and
+    ``plans.store.zorder_by``."""
+    if isinstance(edges, (list, tuple)):
+        edges = F.array(*[F.lit(float(e)) for e in sorted(edges)])
+    v = F.col(value) if isinstance(value, str) else value
     return F.aggregate(
-        edges_lit,
-        F.lit(0),
-        lambda acc, e: acc + F.when(F.col(value_col) > e, 1).otherwise(0),
+        edges, F.lit(0), lambda acc, e: acc + F.when(e < v, 1).otherwise(0)
     )
 
 
@@ -1121,7 +1095,6 @@ def ks_vs_rest(
     group_col: str,
     value_col: str,
     round_to: int = _ROUND,
-    materialize: bool = False,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic of every group AGAINST
     THE REST of the corpus: ``D_g = sup_x |F_g(x) − F_rest(x)|`` over
@@ -1141,35 +1114,22 @@ def ks_vs_rest(
     identical doubles) are engine-stable. Groups that are the whole
     corpus have no rest-sample and report NULL.
 
-    Scale shape: the group CDF is the grouped distributed
-    order-statistics machinery (:func:`grouped_cume_from_counts`) fed
-    a DENSIFIED counts relation — (group × corpus-distinct value) with
-    zero-count probe rows — so no per-group sort ever exceeds a range
-    partition; the global CDF re-aggregates the SAME tie-collapsed
-    counts relation under a constant group (never the raw rows twice).
+    Scale shape: the group CDF is the rank core (:func:`_rank_core`)
+    fed a DENSIFIED counts relation — (group × corpus-distinct value)
+    with zero-count probe rows — so no per-group sort ever exceeds one
+    (group, bucket) slice; the global CDF re-aggregates the SAME
+    tie-collapsed counts relation with no group key (never the
+    raw rows twice).
     The densified relation is G·D rows (G groups, D distinct values):
     linear in the tie-collapsed data per group, the inherent cost of
-    an exact KS. Both max and argmax are partial-aggregatable groupBys
-    (argmax = equi-join back on the broadcast per-group max, then a
-    conditional min — no window over the densified relation).
-
-    The counts relation is the plan's hub — five consumers (values,
-    groups, the densify probe, the global CDF, the whole-corpus
-    fallback), each re-evaluating the source scan + tie-collapse in
-    the lazy plan. ``materialize=True`` eagerly localCheckpoints it so
-    the upstream runs ONCE — at sf0.1 over a cheap parquet scan this
-    measures NEUTRAL (~3 s either way, AQE reuses what matters), so
-    the lazy default stands; the flag exists for expensive upstream
-    pipelines (a filtered join feeding the KS), where five
-    re-evaluations are five times the pipeline — the same opt-in
-    contract as the pair generators.
+    an exact KS. Max and argmax are one partial-aggregatable struct
+    max per group (:func:`_ks_result`) — no window over the densified
+    relation.
     """
     nn = df.select(
         F.col(group_col).alias("_g"), F.col(value_col).alias("_v")
     ).filter(F.col("_v").isNotNull())
     counts = nn.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_cnt"))
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     vals = counts.select("_v").distinct()
     groups = counts.select("_g").distinct()
     dense = (
@@ -1193,62 +1153,25 @@ def ks_vs_rest(
     # (r15 measured experiment, see ks_vs_rest_quantized): a fused
     # tagged pass serialized two chains AQE schedules concurrently and
     # measured SLOWER (4.1→4.6 s at sf0.1).
-    gcdf = grouped_cume_from_counts(dense, ["_g"])
+    gcdf = _rank_core(dense, ["_g"])
     glob = (
-        grouped_cume_from_counts(
-            counts.groupBy("_v")
-            .agg(F.sum("_cnt").alias("_cnt"))
-            .select(F.lit(1).alias("_all"), "_v", "_cnt"),
-            ["_all"],
-        )
+        _rank_core(counts.groupBy("_v").agg(F.sum("_cnt").alias("_cnt")), [])
         .select(
             F.col("_v"),
             F.col("_cume").alias("_gc"),
             F.col("_n").alias("_nt"),
         )
     )
-    diffs = (
-        gcdf.join(glob, "_v")
-        .filter(F.col("_nt") > F.col("_n"))
-        .select(
-            "_g",
-            "_v",
-            "_n",
-            F.abs(
-                F.col("_cume") / F.col("_n")
-                - (F.col("_gc") - F.col("_cume"))
-                / (F.col("_nt") - F.col("_n"))
-            ).alias("_d"),
-        )
+    diffs = gcdf.join(glob, "_v").filter(F.col("_nt") > F.col("_n")).select(
+        "_g",
+        "_v",
+        "_nt",
+        F.abs(
+            F.col("_cume") / F.col("_n")
+            - (F.col("_gc") - F.col("_cume")) / (F.col("_nt") - F.col("_n"))
+        ).alias("_d"),
     )
-    # max + argmax + whole-corpus fallback in ONE aggregation and ONE
-    # null-safe join (r15, guide §1.2 — see ks_vs_rest_quantized): the
-    # struct max picks the largest _d and, on exact-double ties, the
-    # SMALLEST _v (max of −_v) — identical tie-break to the old
-    # filter(_d == _dmax) + min(_v) broadcast-join argmax. Groups that
-    # ARE the whole corpus never enter diffs (its _nt > _n filter keeps
-    # every division non-zero), so the left join from the per-group
-    # sizes relation restores them with NULL statistics — the old
-    # anti-join branch's exact output. The join stays NULL-SAFE: a NULL
-    # group is a real group.
-    best = diffs.groupBy("_g", "_n").agg(
-        F.max(F.struct(F.col("_d"), (-F.col("_v")).alias("_nv"))).alias("_s")
-    )
-    sizes = counts.groupBy("_g").agg(F.sum("_cnt").alias("_n"))
-    return (
-        sizes.join(
-            best.select(F.col("_g").alias("_gb"), "_s"),
-            F.col("_g").eqNullSafe(F.col("_gb")),
-            "left",
-        )
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("_n").cast("bigint").alias("n_group"),
-            F.round(F.col("_s._d"), round_to).alias("ks_d"),
-            F.round(-F.col("_s._nv"), round_to).alias("ks_at"),
-        )
-        .orderBy(group_col)
-    )
+    return _ks_result(diffs, counts, group_col, round_to)
 
 
 def weighted_quantiles(
@@ -1288,11 +1211,11 @@ def weighted_quantiles(
 
     Scale shape: the pre-aggregate shuffles (group, value) pairs with
     map-side combine — bounded by the distinct-value relation like
-    every exact quantile must be — and the window sorts per group;
-    heavy groups engage the same range-partition escape hatch as
-    ``distributed_exact_percentiles`` if a group's distinct set
-    outgrows one task (not wired here: curation group keys are
-    low-cardinality by construction)."""
+    every exact quantile must be — and the window sorts each group's
+    distinct values on one task. Curation group keys are
+    low-cardinality by construction; a group whose distinct set
+    outgrows one task would need the running weight from the rank
+    core's per-bucket offsets (:func:`_rank_core`), not wired here."""
     if not qs or any(not 0.0 < q <= 1.0 for q in qs):
         raise ValueError(f"fractions must be in (0, 1], got {qs}")
     v, w = F.col(value_col), F.col(weight_col)

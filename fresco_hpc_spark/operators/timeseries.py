@@ -67,7 +67,6 @@ def profile_agg(
     value_col: str,
     granularity: str = "hour",
     time_col: str = "time",
-    materialize: bool = False,
 ) -> DataFrame:
     """A4: multi-granularity profile — AVG/MIN/MAX/STDDEV/SUM + exact
     quartiles per bucket (databaseOptimization.ts:138-180).
@@ -79,19 +78,12 @@ def profile_agg(
     ``percentile`` aggregate merges each group's full value multiset
     into one task's buffer, which is fine for small per-bucket groups
     but a single-task memory wall when a bucket holds billions of rows.
-    The primitive replaces the buffer with a range shuffle + bounded
-    windows and interpolates with the same IEEE op order, so the
-    rounded quartiles are unchanged (oracles stay hash-green). The
+    The primitive replaces the buffer with value-range buckets and
+    bounded windows and interpolates with the same IEEE op order, so
+    the rounded quartiles are unchanged (oracles stay hash-green). The
     moment aggregates stay one map-side-combined groupBy; the two
     branches join per-bucket (bucket cardinality = covered time range,
     tiny). granularity in {'minute','hour','day'} like the reference.
-
-    The two branches evaluate the bucketed source independently (r7
-    review): over an expensive uncached upstream the lazy default pays
-    the upstream plan twice. ``materialize=True`` eagerly
-    localCheckpoints the bucketed relation so upstream runs once —
-    same contract as the pair generators' ``materialize`` (the block
-    lives until the caller drops the result).
     """
     from fresco_hpc_spark.operators.percentiles import (
         grouped_exact_percentiles,
@@ -103,8 +95,6 @@ def profile_agg(
         F.date_trunc(granularity, F.col(time_col)).alias("bucket"),
         F.col(value_col),
     )
-    if materialize:
-        bucketed = bucketed.localCheckpoint(eager=True)
     moments = bucketed.groupBy("bucket").agg(
         F.round(F.avg(value_col), _ROUND).alias("avg_value"),
         F.min(value_col).alias("min_value"),

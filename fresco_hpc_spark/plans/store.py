@@ -287,6 +287,7 @@ def zorder_by(
     """
     from fresco_hpc_spark.operators.percentiles import (
         distributed_exact_percentiles,
+        reference_bin_expr,
     )
 
     if not cols:
@@ -305,13 +306,7 @@ def zorder_by(
         if edges[0] is None:
             bucket_cols.append(F.lit(0))
             continue
-        edges_lit = F.array(*[F.lit(float(e)) for e in edges])
-        b = F.aggregate(
-            edges_lit,
-            F.lit(0),
-            lambda acc, e: acc
-            + F.when(F.col(c).cast("double") > e, 1).otherwise(0),
-        )
+        b = reference_bin_expr(edges, F.col(c).cast("double"))
         bucket_cols.append(F.when(F.col(c).isNull(), F.lit(0)).otherwise(b))
     # interleave: output bit (j*len(cols)+i) = bit j of column i's bucket
     key = F.lit(0).cast("bigint")

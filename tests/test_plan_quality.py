@@ -420,19 +420,26 @@ def test_lead_quartile_has_no_single_partition_window(spark):
     assert "SinglePartition" in _explain(spark, ntile_df)
 
 
+def _data_windows_are_per_bucket(plan: str) -> bool:
+    """True when the plan has a window over the data partitioned by the
+    rank core's bucket column ``_b`` alongside the group: the local
+    running count never spans more than one (group, bucket) slice."""
+    return any(
+        "windowspecdefinition" in ln and "_b#" in ln and "_v#" in ln
+        for ln in plan.splitlines()
+    )
+
+
 def test_value_cdf_has_no_per_group_window(spark):
     """VERDICT r6 item 1: the CDF probe must never sort a whole event
     type on one task. The plan has no cume_dist, no SinglePartition
-    exchange, and every window over the DATA relation is partitioned by
-    the range-partition id (_pid) alongside the group — only the tiny
-    per-(pid, group) offsets relation may window on the bare group. The
-    distributed order statistics ride a rangepartitioning exchange."""
+    exchange, and the window over the DATA relation is partitioned by
+    the rank bucket (_b) alongside the group — only the small
+    per-(group, bucket) offsets relation windows on the bare group."""
     plan = plan_of(spark, "value_cdf")
     assert "cume_dist" not in plan
     assert "SinglePartition" not in plan
-    assert "rangepartitioning" in plan
-    # the data-side local-cumsum window includes _pid in its spec
-    assert "_pid" in plan and "windowspecdefinition" in plan
+    assert _data_windows_are_per_bucket(plan)
 
 
 def test_profile_agg_quartiles_are_distributed(spark):
@@ -442,37 +449,97 @@ def test_profile_agg_quartiles_are_distributed(spark):
     plan = plan_of(spark, "profile_agg_day")
     assert "percentile(" not in plan
     assert "SinglePartition" not in plan
-    assert "rangepartitioning" in plan
+    assert _data_windows_are_per_bucket(plan)
 
 
-def test_grouped_cdf_reuses_range_exchange(spark):
-    """grouped_cume_counts feeds TWO consumers (per-(pid,group)
-    subtotals and the probe side of the offsets join) from one range
-    exchange. The adaptive executed plan must materialize that exchange
-    ONCE (ReusedExchange) — losing reuse silently doubles the source
-    scan + tie-collapse aggregation."""
-    df = entrymod.queries()["value_cdf"](spark, SF_SMALL)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed
+@pytest.mark.parametrize(
+    "name",
+    [
+        "value_cdf",
+        "ks_drift",
+        "ks_drift_quantized",
+        "quantile_normalize",
+        "sorted_neighborhood",
+        "weighted_sample",
+    ],
+)
+def test_order_statistics_do_not_depend_on_exchange_reuse(spark, name):
+    """The rank core's buckets are a pure function of the data, so its
+    results must not depend on exchange reuse or AQE: with both off and
+    a different partition count every consumer of the core evaluates
+    its own copy of each subtree, and the rows still equal the default
+    session's. ``spark.sql.exchange.reuse`` is Spark's switch; the
+    ``.enabled`` spelling is the key the package's former reuse guards
+    read, set too so that those guards would refuse to run."""
+
+    def rows():
+        df = entrymod.queries()[name](spark, SF_SMALL)
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    expected = rows()
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.exchange.reuse": "false",
+        "spark.sql.exchange.reuse.enabled": "false",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        got = rows()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got == expected
 
 
-def test_ks_quantized_has_no_value_densify_and_reuses_exchanges(spark):
+def test_rank_buckets_are_balanced(spark):
+    """10k distinct lognormal values in one key spread over at least
+    P/2 buckets, and no bucket holds more than 4·n/P rows."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from fresco_hpc_spark.operators.percentiles import _value_buckets
+
+    rng = random.Random(5)
+    n, p = 10_000, 16
+    vals: set[float] = set()
+    while len(vals) < n:
+        vals.add(rng.lognormvariate(0.0, 1.5))
+    dv = spark.createDataFrame(
+        [("k", v, 1) for v in vals], "g string, _v double, _cnt bigint"
+    )
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(p))
+    try:
+        sizes = [
+            r["c"]
+            for r in _value_buckets(dv, ["g"])
+            .groupBy("_b")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert sum(sizes) == n
+    assert len(sizes) >= p // 2, sizes
+    assert max(sizes) <= 4 * n / p, sizes
+
+
+def test_ks_quantized_has_no_value_densify(spark):
     """VERDICT r7 item 2: the bounded-grid KS must not contain the
     exact operator's groups×distinct-values densify — no cartesian or
     nested-loop join of any kind (even the 1-row stat frame rides an
-    equi-join here), and every relation is O(counts) or O(G·bins).
-    The executed plan must also ReuseExchange each grouped-order-stat
-    range shuffle (three machinery invocations: group edges, group
-    cumes, pooled cumes) — the r8 regression was a carried marker
-    column breaking that reuse and silently corrupting offsets."""
+    equi-join or a scalar subquery here), and every relation is
+    O(counts) or O(G·bins)."""
     plan = plan_of(spark, "ks_drift_quantized")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    df = entrymod.queries()["ks_drift_quantized"](spark, SF_SMALL)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert executed.count("ReusedExchange") >= 3, executed.count("ReusedExchange")
 
 
 def test_lazy_operators_run_no_construction_jobs(spark):
@@ -500,6 +567,9 @@ def test_lazy_operators_run_no_construction_jobs(spark):
     ops.profile_agg(df, "v", time_col="ts")
     ops.grouped_value_cdf(df, ["k"], "v")
     ops.grouped_exact_percentiles(df, ["k"], "v", [0.5])
+    ops.sorted_neighborhood_pairs(df, "k")
+    ops.ks_vs_rest(df, "k", "v")
+    ops.quantile_normalize(df, ["k"], "v", [0.0, 1.0])
     ops.sessionize(df, "k")
     ops.topn_others(df, "k", n=5)
     ops.category_counts(df, "k")
@@ -769,18 +839,11 @@ def test_corpus_retrieval_v1_legs_prune_partitions(spark):
     ), sem_plan[:800]
 
 
-def test_sorted_neighborhood_reuses_range_exchange(spark):
-    """The range exchange feeds both the per-pid counts and the ordinal
-    assignment — the adaptive executed plan must materialize it ONCE
-    (ReusedExchange), the same load-bearing reuse contract as
-    grouped_cume_counts; and the candidate generation is an equi-join,
-    never a cartesian."""
+def test_sorted_neighborhood_candidates_are_equi_join(spark):
+    """The candidate generation is an equi-join on ordinal + gap, never
+    a cartesian."""
     plan = plan_of(spark, "sorted_neighborhood")
     assert "CartesianProduct" not in plan
-    df = entrymod.queries()["sorted_neighborhood"](spark, SF_SMALL)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed
 
 
 def test_revenue_star_broadcasts_dims_and_partitions_facts(spark):
@@ -897,43 +960,6 @@ def test_pair_fast_path_joins_on_bigint_ids(spark):
             )
     finally:
         ranked.unpersist()
-
-
-def test_ks_machinery_range_exchanges_materialize_once(spark):
-    """r15 regression guard for the r8 offsets-corruption class, found
-    live this round: restructuring ks_vs_rest's argmax tail changed how
-    DeduplicateRelations aliased the two copies of the grouped-order-
-    statistics range exchange; their canonical forms stopped matching,
-    ReuseExchange silently did not fire, and each copy sampled its own
-    partition boundaries — nondeterministic, OVERSHOOTING ks_d. For
-    ks_drift, pin the structural invariant: every REPARTITION_BY_NUM
-    range exchange in the EXECUTED plan materializes once and all other
-    occurrences are ReusedExchange references. (ks_drift_quantized
-    legitimately carries two UNREUSED machinery copies whose _off/_cume
-    outputs are column-pruned — only the pid-independent _n survives,
-    so split pairing is harmless there; it is covered by the
-    determinism probe below instead.)"""
-    import re
-
-    df = entrymod.queries()["ks_drift"](spark, SF_SMALL)
-    df.collect()
-    final = (
-        df._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("+- == Initial Plan ==")[0]
-    )
-    mat, reused = set(), set()
-    for line in final.splitlines():
-        m = re.search(
-            r"Exchange rangepartitioning\([^)]*\), REPARTITION_BY_NUM,"
-            r" \[plan_id=(\d+)\]",
-            line,
-        )
-        if not m:
-            continue
-        (reused if "ReusedExchange" in line else mat).add(m.group(1))
-    assert mat and not (mat - reused), (sorted(mat), sorted(reused))
 
 
 def test_ks_quantized_is_deterministic_across_rebuilds(spark):
